@@ -58,6 +58,25 @@ class TableIO:
             return self.spark.catalog.tableExists(name)
         return os.path.isdir(self._path(name))
 
+    def committed(self, name: str) -> bool:
+        """True once a write of `name` has fully committed: the table
+        exists in the Iceberg catalog (createOrReplace is atomic), or the
+        parquet directory carries the output committer's `_SUCCESS` file,
+        which lands only after every task's files are in place."""
+        if self.iceberg:
+            return self.spark.catalog.tableExists(name)
+        return os.path.isfile(os.path.join(self._path(name), "_SUCCESS"))
+
+    def drop(self, name: str) -> None:
+        """Remove `name` if present; afterwards `committed(name)` is False."""
+        if self.iceberg:
+            self.spark.sql(f"DROP TABLE IF EXISTS {name}")
+            return
+        path = self._path(name)
+        if os.path.isdir(path):
+            import shutil
+            shutil.rmtree(path)
+
     def write_bucketed(self, df: DataFrame, name: str, n_buckets: int,
                        bucket_cols: list[str],
                        sort_cols: list[str] | None = None,

@@ -1,11 +1,14 @@
 """Durable KG-construction job: the spark-submit entry semantics.
 
-Same dataflow as ecokg_spark.pipeline.build_kg, but every stage boundary
+Same dataflow as ecokg_spark.pipeline.build_kg, declared once as an
+ordered stage list and run by StageRunner.run_stages: every stage
 materializes to a TableIO table (Iceberg when a catalog is configured,
-parquet otherwise) through StageRunner, which also writes per-partition
-lineage + latency metrics to the checkpoint table and lets a killed run
-RESUME: completed stages are read back instead of recomputed (north_rule:
-"resumable from checkpoint with per-partition lineage + metrics").
+parquet otherwise) and commits by writing its per-partition lineage +
+latency metrics to kg._checkpoints.<stage>. Independent stages run
+concurrently, each starting as soon as its inputs have committed. A killed
+run RESUMES: committed stages are skipped, and read back only where a stage
+that has to run needs them (north_rule: "resumable from checkpoint with
+per-partition lineage + metrics").
 
 Ship it with:  scripts/package_pyfiles.py  ->  dist/ecokg_spark.zip
                spark-submit --py-files dist/ecokg_spark.zip \
@@ -51,32 +54,26 @@ def run_kg_job(
     one corpus pass: audit + triple + combiner rows, columnar so each
     consumer reads only its columns), kg.audit, kg.triples, kg.linked_raw,
     kg.quarantine, kg.canonical, kg.nodes, kg.edges,
-    kg.stats_by_predicate, kg.stats_by_category; per-stage lineage under
-    kg._checkpoints.<stage>.
+    kg.stats_by_predicate, kg.stats_by_category; per-stage lineage, which
+    is also the stage's commit record, under kg._checkpoints.<stage>.
+    Raises checkpoint.StageError naming the first stage that failed.
     """
-    r = StageRunner(io, run_id=run_id, resume=resume)
-    aliases = aliases if aliases is not None else alias_table(spark)
 
-    termlist = r.run("termlist", lambda: build_termlist(aliases))
-
-    fused = r.run(
-        "fused",
-        lambda: fused_extract_triples(pages).select(
+    def _fused() -> DataFrame:
+        return fused_extract_triples(pages).select(
             "url", "sent_id", "subj_mention", "verb", "obj_mention",
             "n_sentences",
             F.when(
                 F.col("sent_id") == AUDIT_SENT_ID,
                 F.sha2(F.encode(F.col("extracted_text"), "UTF-8"), 256),
             ).alias("text_sha256"),
-        ),
-    )
-    r.run("audit", lambda: fused.where(F.col("sent_id") == AUDIT_SENT_ID)
-          .select("url", "text_sha256", "n_sentences"))
-    triples = r.run("triples", lambda: fused.where(F.col("sent_id") >= 0)
-                    .select("url", "sent_id", "subj_mention", "verb",
-                            "obj_mention"))
+        )
 
-    def _linked() -> DataFrame:
+    def _triples(fused: DataFrame) -> DataFrame:
+        return fused.where(F.col("sent_id") >= 0).select(
+            "url", "sent_id", "subj_mention", "verb", "obj_mention")
+
+    def _linked(fused: DataFrame, termlist: DataFrame) -> DataFrame:
         surfaces = fused.where(F.col("sent_id") == MENTION_SENT_ID).select(
             F.col("subj_mention").alias("mention")).distinct()
         resolved, _ = link_mentions(surfaces, termlist, "mention")
@@ -87,27 +84,21 @@ def run_kg_job(
         o = res.select(F.col("mention").alias("obj_mention"),
                        F.col("curie").alias("obj_curie"),
                        F.col("match_kind").alias("obj_match"))
-        return triples.join(F.broadcast(s), "subj_mention", "left").join(
+        # off kg.fused, not kg.triples: same rows, one stage less to wait for
+        return _triples(fused).join(F.broadcast(s), "subj_mention", "left").join(
             F.broadcast(o), "obj_mention", "left")
 
-    j = r.run("linked_raw", _linked)
-    r.run("quarantine", lambda: (
-        j.where(F.col("subj_curie").isNull())
-        .select("url", "sent_id", F.col("subj_mention").alias("mention"),
-                F.lit("subject").alias("role"))
-        .unionByName(j.where(F.col("obj_curie").isNull()).select(
-            "url", "sent_id", F.col("obj_mention").alias("mention"),
-            F.lit("object").alias("role")))
-    ))
+    def _quarantine(j: DataFrame) -> DataFrame:
+        return (
+            j.where(F.col("subj_curie").isNull())
+            .select("url", "sent_id", F.col("subj_mention").alias("mention"),
+                    F.lit("subject").alias("role"))
+            .unionByName(j.where(F.col("obj_curie").isNull()).select(
+                "url", "sent_id", F.col("obj_mention").alias("mention"),
+                F.lit("object").alias("role")))
+        )
 
-    canon = r.run("canonical", lambda: canonical_map(
-        alias_identity_edges(termlist),
-        termlist.select(F.col("curie").alias("node")),
-    ))
-    canon_b = F.broadcast(canon)
-    vmap = F.broadcast(verb_map(spark))
-
-    def _edges() -> DataFrame:
+    def _edges(j: DataFrame, fused: DataFrame, canon: DataFrame) -> DataFrame:
         # resolve via the durable linked_raw table's (mention -> curie)
         # bindings; candidates = the fused pass's batch-distinct (s,v,o)
         # combiner rows, so this never rescans per-sentence triples
@@ -120,6 +111,7 @@ def run_kg_job(
         )
         svo = fused.where(F.col("sent_id") == SVO_SENT_ID).select(
             "subj_mention", "verb", "obj_mention")
+        canon_b = F.broadcast(canon)
         raw = (
             svo.join(F.broadcast(res.select(
                 F.col("mention").alias("subj_mention"),
@@ -131,17 +123,16 @@ def run_kg_job(
                   .withColumnRenamed("canonical", "subject"), "subj_curie")
             .join(canon_b.withColumnRenamed("node", "obj_curie")
                   .withColumnRenamed("canonical", "object"), "obj_curie")
-            .join(vmap, "verb")
+            .join(F.broadcast(verb_map(spark)), "verb")
             .where(F.col("subject") != F.col("object"))
             .select("subject", "predicate", "object", "relation",
                     F.lit("ecokg-web").alias("provided_by"))
         )
         return merge_edges([raw])
 
-    edges = r.run("edges", _edges)
-
-    def _nodes() -> DataFrame:
-        cat = category_table(spark).join(canon_b, F.col("curie") == F.col("node"))
+    def _nodes(edges: DataFrame, canon: DataFrame) -> DataFrame:
+        cat = category_table(spark).join(F.broadcast(canon),
+                                          F.col("curie") == F.col("node"))
         dim = (cat.groupBy("canonical")
                .agg(F.min("curie").alias("curie"), F.min("name").alias("name"),
                     F.min("category").alias("category"))
@@ -153,7 +144,22 @@ def run_kg_job(
                 "id", "name", "category", F.lit("ecokg-web").alias("provided_by"))
         ])
 
-    nodes = r.run("nodes", _nodes)
-    r.run("stats_by_predicate", lambda: count_by_predicate(edges))
-    r.run("stats_by_category", lambda: count_by_category(nodes))
+    r = StageRunner(io, run_id=run_id, resume=resume)
+    r.run_stages([
+        ("fused", (), _fused),
+        ("termlist", (), lambda: build_termlist(
+            aliases if aliases is not None else alias_table(spark))),
+        ("audit", ("fused",), lambda fused: fused.where(F.col("sent_id") == AUDIT_SENT_ID)
+         .select("url", "text_sha256", "n_sentences")),
+        ("triples", ("fused",), _triples),
+        ("canonical", ("termlist",), lambda termlist: canonical_map(
+            alias_identity_edges(termlist),
+            termlist.select(F.col("curie").alias("node")))),
+        ("linked_raw", ("fused", "termlist"), _linked),
+        ("quarantine", ("linked_raw",), _quarantine),
+        ("edges", ("linked_raw", "fused", "canonical"), _edges),
+        ("nodes", ("edges", "canonical"), _nodes),
+        ("stats_by_predicate", ("edges",), count_by_predicate),
+        ("stats_by_category", ("nodes",), count_by_category),
+    ])
     return r

@@ -1,10 +1,23 @@
 """Resumable checkpointing with per-partition lineage + metrics.
 
-North-rule requirement: every stage writes per-partition lineage
-(row counts, key-range fingerprint, wall-clock) to a checkpoint table so a
-killed run resumes mid-pipeline: a completed stage's output is read back
-instead of recomputed; an incomplete stage recomputes only the inputs whose
-keys are absent from its partial output (anti-join resume).
+North-rule requirement: every stage writes per-partition lineage (row
+count, key fingerprint = the sum of xxhash64 over the first column — a
+partitioning-independent content check, not a key range — and wall-clock
+latency) to a checkpoint table, so a killed run resumes mid-pipeline: a
+completed stage's output is read back instead of recomputed.
+
+The lineage table ``kg._checkpoints.<stage>`` is also the stage's commit
+record. A stage deletes its old record, writes ``kg.<stage>``, reads it
+back and writes the record last; it counts as done only once the record
+has fully committed (``TableIO.committed``). A run killed anywhere in
+between — including a ``resume=False`` rerun overwriting an earlier run's
+output — leaves the stage uncommitted, and the next resume recomputes it.
+
+``StageRunner.run_stages`` runs a declared stage list as a DAG: each stage
+starts on its own driver thread once its inputs have committed, and a
+committed input is read back only when a stage that has to run needs it.
+``anti_join_remaining`` gives an incomplete stage the inputs whose keys
+are absent from its partial output (anti-join resume).
 
 Plain application logic over TableIO — no Spark built-in claims to do this
 (SURVEY.md §4 custom-physical item 3).
@@ -12,15 +25,21 @@ Plain application logic over TableIO — no Spark built-in claims to do this
 
 from __future__ import annotations
 
+import threading
 import time
-from collections.abc import Callable
+from collections.abc import Callable, Sequence
+from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ecokg_spark.io import TableIO
 
 CHECKPOINT_TABLE = "kg._checkpoints"
+
+# (name, input stage names, build): build takes the inputs' tables in order
+Stage = tuple[str, tuple[str, ...], Callable[..., DataFrame]]
 
 
 def partition_metrics(df: DataFrame, stage: str, run_id: str) -> DataFrame:
@@ -45,6 +64,15 @@ def partition_metrics(df: DataFrame, stage: str, run_id: str) -> DataFrame:
     )
 
 
+class StageError(RuntimeError):
+    """A stage of ``StageRunner.run_stages`` failed; ``stage`` names it and
+    the stage's own exception is the ``__cause__``."""
+
+    def __init__(self, stage: str):
+        super().__init__(f"stage {stage!r} failed")
+        self.stage = stage
+
+
 class StageRunner:
     """Runs named stages with materialize-once + resume semantics."""
 
@@ -54,28 +82,92 @@ class StageRunner:
         self.resume = resume
         self.timings: dict[str, float] = {}
 
-    def _done_marker(self, stage: str) -> str:
-        return f"kg._done.{stage}"
+    def committed(self, stage: str) -> bool:
+        return self.io.committed(f"{CHECKPOINT_TABLE}.{stage}")
 
     def run(self, stage: str, fn: Callable[[], DataFrame]) -> DataFrame:
         """Materialize `fn()` to table kg.<stage>; on resume, read the
-        completed output back instead of recomputing."""
+        committed output back instead of recomputing."""
+        if self.resume and self.committed(stage):
+            return self.io.read(f"kg.{stage}")
+        return self._materialize(stage, fn)
+
+    def _materialize(self, stage: str, fn: Callable[[], DataFrame]) -> DataFrame:
         out_table = f"kg.{stage}"
-        if self.resume and self.io.exists(self._done_marker(stage)) and self.io.exists(out_table):
-            return self.io.read(out_table)
         t0 = time.time()
-        df = fn()
-        self.io.write(df, out_table)
+        self.io.drop(f"{CHECKPOINT_TABLE}.{stage}")
+        self.io.write(fn(), out_table)
         result = self.io.read(out_table)
-        # lineage/metrics written after the data — a crash between the two
-        # just re-runs the stage (at-least-once, idempotent overwrite)
         metrics = partition_metrics(result, stage, self.run_id).withColumn(
             "latency_s", F.lit(round(time.time() - t0, 3))
         )
-        self.io.write(metrics, CHECKPOINT_TABLE + f".{stage}")
-        self.io.write(metrics.limit(0).select("stage"), self._done_marker(stage))
+        self.io.write(metrics, f"{CHECKPOINT_TABLE}.{stage}")  # the commit
         self.timings[stage] = time.time() - t0
         return result
+
+    def run_stages(self, stages: Sequence[Stage]) -> None:
+        """Run `stages`, listed inputs-first, as a DAG.
+
+        A stage runs when resume is off, when it is not committed, or when
+        one of its inputs runs; the commit records of every stage that will
+        run are deleted before the first starts, so no committed stage is
+        ever left downstream of one that is not. Each running stage starts
+        on its own thread as soon as its running inputs have committed. A
+        committed input is read back only if a running stage needs it, so a
+        fully committed resume starts no Spark job. If a stage fails, the
+        stages in flight finish, nothing new starts, and StageError names
+        the failed stage."""
+        todo: dict[str, Stage] = {}
+        declared: set[str] = set()
+        for st in stages:
+            name, inputs, _ = st
+            if undeclared := [i for i in inputs if i not in declared]:
+                raise ValueError(f"stage {name!r}: inputs {undeclared} not listed before it")
+            declared.add(name)
+            if not (self.resume and self.committed(name)) or any(i in todo for i in inputs):
+                todo[name] = st
+        if not todo:
+            return
+        for name in todo:
+            self.io.drop(f"{CHECKPOINT_TABLE}.{name}")
+
+        done: dict[str, DataFrame] = {}  # stages run here; set by the loop below
+        read_back: dict[str, DataFrame] = {}  # committed inputs, read lazily
+        read_lock = threading.Lock()
+
+        def table(name: str) -> DataFrame:
+            if name in todo:
+                return done[name]
+            with read_lock:
+                if name not in read_back:
+                    read_back[name] = self.io.read(f"kg.{name}")
+                return read_back[name]
+
+        # stage threads run with the caller's job group, properties and tags
+        @inheritable_thread_target(self.io.spark)
+        def materialize(name: str, inputs: tuple[str, ...], build) -> DataFrame:
+            return self._materialize(name, lambda: build(*[table(i) for i in inputs]))
+
+        pending = list(todo)
+        running: dict[Future, str] = {}
+        failed: tuple[str, Exception] | None = None
+        with ThreadPoolExecutor(max_workers=len(todo), thread_name_prefix="stage") as pool:
+            while pending or running:
+                for name in [n for n in pending
+                             if all(i not in todo or i in done for i in todo[n][1])]:
+                    pending.remove(name)
+                    running[pool.submit(materialize, *todo[name])] = name
+                finished, _ = wait(running, return_when=FIRST_COMPLETED)
+                for fut in finished:
+                    name = running.pop(fut)
+                    try:
+                        done[name] = fut.result()
+                    except Exception as e:  # noqa: BLE001 - re-raised below
+                        failed = failed or (name, e)
+                if failed:
+                    pending.clear()
+        if failed:
+            raise StageError(failed[0]) from failed[1]
 
     def anti_join_remaining(self, inputs: DataFrame, stage: str, key: str) -> DataFrame:
         """Inputs not yet present in a stage's partial output (mid-stage

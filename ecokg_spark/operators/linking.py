@@ -33,7 +33,6 @@ STOPWORDS = ["about", "all", "the", "a", "an", "it", "this", "that", "and", "or"
 
 MINHASH_K = 32          # signature length
 LSH_BANDS = 16          # 16 bands x 2 rows: P(cand) ≈ 1-(1-j²)^16
-LSH_ROWS = MINHASH_K // LSH_BANDS
 MAX_EDIT_DISTANCE = 2   # fuzzy verify threshold
 
 # Fuzzy candidate generation is size-gated like a broadcast join (the same
@@ -104,14 +103,6 @@ def lsh_band_table(
     )
     return sig.select(
         *keep_cols, F.posexplode(band_hashes).alias("band_idx", "band_hash")
-    )
-
-
-def lsh_bands(sig_col, bands: int = LSH_BANDS, rows: int = LSH_ROWS):
-    """Band hashes: array of `bands` xxhash64 values over `rows`-slices."""
-    return F.array(
-        *[F.xxhash64(F.lit(b), *[F.element_at(sig_col, b * rows + r + 1) for r in range(rows)])
-          for b in range(bands)]
     )
 
 

@@ -1,4 +1,4 @@
-"""Explicit skew handling: salted repartition + two-phase salted aggregation.
+"""Explicit skew handling: two-phase salted aggregation.
 
 The corpus is head-heavy by construction (hot subject entity ~30% of
 mentions; `biolink:has_phenotype` ~45-48% of edges — the reference graph's
@@ -26,15 +26,6 @@ def salt_col(*key_cols: str, buckets: int = 16) -> Column:
     membership-sensitive uses: do not salt first/collect_list/limit-style
     logic with this column, and do not persist it as a stable key."""
     return F.pmod(F.xxhash64(*key_cols, F.spark_partition_id()), F.lit(buckets))
-
-
-def salted_repartition(df: DataFrame, key: str, partitions: int, buckets: int = 16) -> DataFrame:
-    """Repartition on hash(key) ⊕ salt so a hot key spreads over `buckets`
-    partitions instead of one (north_rule: salted repartitioning on
-    head-entity hash)."""
-    return df.repartition(
-        partitions, F.pmod(F.xxhash64(F.col(key)) + salt_col(key, buckets=buckets), F.lit(partitions))
-    )
 
 
 def salted_count(df: DataFrame, group_cols: list[str], out_col: str = "n",

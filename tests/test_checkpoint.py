@@ -1,11 +1,11 @@
 """Checkpoint/resume: stage materialization, lineage metrics, anti-join
-mid-stage resume."""
+mid-stage resume, and crash/resume at every boundary of a stage DAG."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from ecokg_spark.io import TableIO
-from ecokg_spark.operators.checkpoint import StageRunner, partition_metrics
+from ecokg_spark.operators.checkpoint import StageError, StageRunner, partition_metrics
 
 
 @pytest.fixture()
@@ -52,3 +52,91 @@ def test_anti_join_remaining(spark, io):
     io.write(spark.range(5).select(F.col("id").alias("k")), "kg.stage_x")
     rem = {x["k"] for x in r.anti_join_remaining(inputs, "stage_x", "k").collect()}
     assert rem == {5, 6, 7, 8, 9}
+
+
+# _dag's stages: a -> (b, c) -> d
+DOWNSTREAM = {"a": set("abcd"), "b": {"b", "d"}, "c": {"c", "d"}, "d": {"d"}}
+
+
+def _dag(spark, fail: str | None = None):
+    """a -> (b, c) -> d; stage `fail` dies inside its write job, after some of
+    its tasks may already have written their files."""
+    def maybe_fail(df, name):
+        if name != fail:
+            return df
+        return df.withColumn("k", F.when(F.col("k") == 150, F.raise_error(
+            F.lit(f"{name} died"))).otherwise(F.col("k")))
+
+    return [
+        ("a", (), lambda: maybe_fail(spark.range(200).select(
+            F.col("id").alias("k"), (F.col("id") * 3).alias("x")), "a")),
+        ("b", ("a",), lambda a: maybe_fail(a.select("k", (F.col("x") * 2).alias("y")), "b")),
+        ("c", ("a",), lambda a: maybe_fail(a.where(F.col("k") % 2 == 0), "c")),
+        ("d", ("b", "c"), lambda b, c: maybe_fail(b.join(c, "k"), "d")),
+    ]
+
+
+def _tables(io):
+    return {n: sorted(map(tuple, io.read(f"kg.{n}").collect())) for n in "abcd"}
+
+
+@pytest.fixture(scope="module")
+def clean(spark, tmp_path_factory):
+    io = TableIO(spark, warehouse=str(tmp_path_factory.mktemp("clean")))
+    StageRunner(io, run_id="clean").run_stages(_dag(spark))
+    return _tables(io)
+
+
+class CrashBeforeCommit(TableIO):
+    """Dies right after `stage`'s data write, before its commit record."""
+
+    def __init__(self, spark, warehouse, stage):
+        super().__init__(spark, warehouse)
+        self.stage = stage
+
+    def write(self, df, name, mode="overwrite", partition_by=None):
+        if name == f"kg._checkpoints.{self.stage}":
+            raise RuntimeError("killed")
+        super().write(df, name, mode, partition_by)
+
+
+@pytest.mark.parametrize("stage", "abcd")
+def test_crash_between_data_write_and_commit(spark, io, clean, stage):
+    crashing = CrashBeforeCommit(spark, io.warehouse, stage)
+    with pytest.raises(StageError, match=repr(stage)) as err:
+        StageRunner(crashing, run_id="t1").run_stages(_dag(spark))
+    assert err.value.stage == stage
+    # the data landed, but the stage is not committed
+    assert io.exists(f"kg.{stage}") and not StageRunner(io, "x").committed(stage)
+    r = StageRunner(io, run_id="t2")
+    r.run_stages(_dag(spark))
+    assert set(r.timings) == DOWNSTREAM[stage]
+    assert _tables(io) == clean
+
+
+def test_rerun_dying_mid_write_leaves_no_commit_record(spark, io, clean):
+    StageRunner(io, run_id="t1").run_stages(_dag(spark))
+    # a resume=False rerun over the committed warehouse dies writing b
+    with pytest.raises(StageError, match="'b'"):
+        StageRunner(io, run_id="t2", resume=False).run_stages(_dag(spark, fail="b"))
+    assert not StageRunner(io, "x").committed("b")
+    r = StageRunner(io, run_id="t3")
+    r.run_stages(_dag(spark))
+    assert set(r.timings) == {"b", "d"}
+    assert _tables(io) == clean
+
+
+def test_failed_stage_is_named_and_committed_stages_resume(spark, io, clean):
+    with pytest.raises(StageError, match="'c'") as err:
+        StageRunner(io, run_id="t1").run_stages(_dag(spark, fail="c"))
+    assert "c died" in str(err.value.__cause__)
+    # b ran beside c and finished; d never started
+    r = StageRunner(io, run_id="t2")
+    r.run_stages(_dag(spark))
+    assert set(r.timings) == {"c", "d"}
+    assert _tables(io) == clean
+
+
+def test_stage_inputs_must_be_listed_first(io):
+    with pytest.raises(ValueError, match="'a'"):
+        StageRunner(io, run_id="t1").run_stages([("b", ("a",), lambda a: a)])

@@ -1,5 +1,6 @@
 """Durable spark-submit job: stage tables, lineage metrics, resume."""
 
+import os
 import shutil
 
 from pyspark.sql import functions as F
@@ -10,6 +11,20 @@ from ecokg_spark.pipeline import build_kg
 from ecokg_spark.sources.pages import synth_pages
 
 N = 200
+STAGES = ["termlist", "fused", "audit", "triples", "linked_raw", "quarantine",
+          "canonical", "edges", "nodes", "stats_by_predicate", "stats_by_category"]
+
+
+def _last_job_id(spark, group: str) -> int:
+    """Id of a one-task job run under `group`; job ids are global and
+    increasing, so two probes one id apart bracket zero jobs."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return max(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_job_runs_resumes_and_matches_pipeline(spark, tmp_path):
@@ -18,9 +33,7 @@ def test_job_runs_resumes_and_matches_pipeline(spark, tmp_path):
     io = TableIO(spark, warehouse=wh)
 
     r1 = run_kg_job(spark, pages, io, run_id="t1")
-    assert set(r1.timings) >= {"termlist", "fused", "audit", "triples",
-                               "linked_raw", "quarantine", "canonical",
-                               "edges", "nodes"}
+    assert set(r1.timings) == set(STAGES)
     edges = io.read("kg.edges")
     n_edges = edges.count()
     assert n_edges > 0
@@ -35,16 +48,23 @@ def test_job_runs_resumes_and_matches_pipeline(spark, tmp_path):
     assert m.where(F.col("stage") == "edges").count() >= 1
     assert {"partition_id", "row_count", "key_fingerprint", "latency_s"} <= set(m.columns)
 
-    # full resume: nothing recomputes
+    # one data table + one commit record per stage, nothing else
+    assert sorted(os.listdir(f"{wh}/kg")) == sorted([*STAGES, "_checkpoints"])
+    assert sorted(os.listdir(f"{wh}/kg/_checkpoints")) == sorted(STAGES)
+
+    # full resume: nothing recomputes, nothing is even read back
+    before = _last_job_id(spark, "probe-before")
     r2 = run_kg_job(spark, pages, io, run_id="t2")
+    assert _last_job_id(spark, "probe-after") == before + 1  # no job in between
     assert r2.timings == {}
 
-    # partial resume: drop the edges stage -> only downstream recomputes
+    # partial resume: drop the edges stage and its commit record -> it and
+    # only its downstream recompute
     shutil.rmtree(f"{wh}/kg/edges")
-    shutil.rmtree(f"{wh}/kg/_done/edges")
+    shutil.rmtree(f"{wh}/kg/_checkpoints/edges")
     r3 = run_kg_job(spark, pages, io, run_id="t3")
-    assert "edges" in r3.timings
-    assert "fused" not in r3.timings and "linked_raw" not in r3.timings
+    assert set(r3.timings) == {"edges", "nodes", "stats_by_predicate",
+                               "stats_by_category"}
     assert io.read("kg.edges").count() == n_edges
 
 
