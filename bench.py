@@ -112,7 +112,7 @@ def run_pipeline_once(spark, path: str, cores: int) -> float:
 
     t0 = time.time()
     pages = spark.read.parquet(path).coalesce(max(min(cores, 16), 4))
-    out = build_kg(spark, pages, materialize_linked=False,
+    out = build_kg(spark, pages,
                    scratch_dir=os.environ.get("ECOKG_SCRATCH_DIR",
                                               "/tmp/ecokg_scratch"))
     # the two sink actions are independent: submit concurrently so the

@@ -13,11 +13,12 @@ has fully committed (``TableIO.committed``). A run killed anywhere in
 between — including a ``resume=False`` rerun overwriting an earlier run's
 output — leaves the stage uncommitted, and the next resume recomputes it.
 
-``StageRunner.run_stages`` runs a declared stage list as a DAG: each stage
-starts on its own driver thread once its inputs have committed, and a
-committed input is read back only when a stage that has to run needs it.
-``anti_join_remaining`` gives an incomplete stage the inputs whose keys
-are absent from its partial output (anti-join resume).
+``run_dag`` runs a declared stage list as a DAG under a caller-chosen
+materialization policy: each stage starts on its own driver thread once its
+inputs have finished. ``StageRunner.run_stages`` is the durable policy: it
+runs the stages that are not committed (or sit downstream of one that is
+not), materializes each as a table, and reads a committed input back only
+when a stage that has to run needs it.
 
 Plain application logic over TableIO — no Spark built-in claims to do this
 (SURVEY.md §4 custom-physical item 3).
@@ -27,11 +28,11 @@ from __future__ import annotations
 
 import threading
 import time
-from collections.abc import Callable, Sequence
+from collections.abc import Callable, Collection, Sequence
 from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
 
 from pyspark import inheritable_thread_target
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ecokg_spark.io import TableIO
@@ -105,75 +106,99 @@ class StageRunner:
         self.timings[stage] = time.time() - t0
         return result
 
-    def run_stages(self, stages: Sequence[Stage]) -> None:
-        """Run `stages`, listed inputs-first, as a DAG.
+    def run_stages(self, stages: Sequence[Stage], transient: Collection[str] = ()) -> None:
+        """Run `stages`, listed inputs-first, as a DAG of durable tables.
 
         A stage runs when resume is off, when it is not committed, or when
         one of its inputs runs; the commit records of every stage that will
         run are deleted before the first starts, so no committed stage is
-        ever left downstream of one that is not. Each running stage starts
-        on its own thread as soon as its running inputs have committed. A
-        committed input is read back only if a running stage needs it, so a
-        fully committed resume starts no Spark job. If a stage fails, the
-        stages in flight finish, nothing new starts, and StageError names
-        the failed stage."""
-        todo: dict[str, Stage] = {}
+        ever left downstream of one that is not. A committed input is read
+        back only if a running stage needs it, so a fully committed resume
+        starts no Spark job. A `transient` stage has no table and no commit
+        record: it runs, untimed, only when a running stage reads it, and
+        when one of its inputs runs, so do its readers. Failures raise
+        StageError as in run_dag."""
+        transient = set(transient)
+        dirty: set[str] = set()
         declared: set[str] = set()
-        for st in stages:
-            name, inputs, _ = st
+        for name, inputs, _ in stages:
             if undeclared := [i for i in inputs if i not in declared]:
                 raise ValueError(f"stage {name!r}: inputs {undeclared} not listed before it")
             declared.add(name)
-            if not (self.resume and self.committed(name)) or any(i in todo for i in inputs):
-                todo[name] = st
+            if any(i in dirty for i in inputs) or (
+                    name not in transient and not (self.resume and self.committed(name))):
+                dirty.add(name)
+        todo = dirty - transient
+        for name, inputs, _ in reversed(stages):
+            if name in todo:
+                todo.update(i for i in inputs if i in transient)
         if not todo:
             return
-        for name in todo:
+        for name in todo - transient:
             self.io.drop(f"{CHECKPOINT_TABLE}.{name}")
+        run_dag(
+            self.io.spark,
+            [st for st in stages if st[0] in todo],
+            lambda name, build: build() if name in transient else self._materialize(name, build),
+            read=lambda name: self.io.read(f"kg.{name}"),
+        )
 
-        done: dict[str, DataFrame] = {}  # stages run here; set by the loop below
-        read_back: dict[str, DataFrame] = {}  # committed inputs, read lazily
-        read_lock = threading.Lock()
 
-        def table(name: str) -> DataFrame:
-            if name in todo:
-                return done[name]
-            with read_lock:
-                if name not in read_back:
-                    read_back[name] = self.io.read(f"kg.{name}")
-                return read_back[name]
+def run_dag(
+    spark: SparkSession,
+    stages: Sequence[Stage],
+    materialize: Callable[[str, Callable[[], DataFrame]], DataFrame],
+    read: Callable[[str], DataFrame] | None = None,
+) -> dict[str, DataFrame]:
+    """Run `stages`, listed inputs-first, as a DAG; returns each stage's
+    output by name.
 
-        # stage threads run with the caller's job group, properties and tags
-        @inheritable_thread_target(self.io.spark)
-        def materialize(name: str, inputs: tuple[str, ...], build) -> DataFrame:
-            return self._materialize(name, lambda: build(*[table(i) for i in inputs]))
+    Each stage starts on its own driver thread as soon as the inputs it
+    lists among `stages` have finished, and its output is
+    `materialize(name, build)`, where `build()` applies the stage to its
+    inputs. An input that is not in `stages` comes from `read(name)`,
+    called at most once per name and only when a stage first needs it. If
+    a stage fails, the stages in flight finish, nothing new starts, and
+    StageError names the failed stage."""
+    names = {name for name, _, _ in stages}
+    done: dict[str, DataFrame] = {}  # stages run here; set by the loop below
+    read_back: dict[str, DataFrame] = {}
+    read_lock = threading.Lock()
 
-        pending = list(todo)
-        running: dict[Future, str] = {}
-        failed: tuple[str, Exception] | None = None
-        with ThreadPoolExecutor(max_workers=len(todo), thread_name_prefix="stage") as pool:
-            while pending or running:
-                for name in [n for n in pending
-                             if all(i not in todo or i in done for i in todo[n][1])]:
-                    pending.remove(name)
-                    running[pool.submit(materialize, *todo[name])] = name
-                finished, _ = wait(running, return_when=FIRST_COMPLETED)
-                for fut in finished:
-                    name = running.pop(fut)
-                    try:
-                        done[name] = fut.result()
-                    except Exception as e:  # noqa: BLE001 - re-raised below
-                        failed = failed or (name, e)
-                if failed:
-                    pending.clear()
-        if failed:
-            raise StageError(failed[0]) from failed[1]
+    def table(name: str) -> DataFrame:
+        if name in names:
+            return done[name]
+        with read_lock:
+            if name not in read_back:
+                read_back[name] = read(name)
+            return read_back[name]
 
-    def anti_join_remaining(self, inputs: DataFrame, stage: str, key: str) -> DataFrame:
-        """Inputs not yet present in a stage's partial output (mid-stage
-        resume): anti-join on `key` against what already landed."""
-        out_table = f"kg.{stage}"
-        if not self.io.exists(out_table):
-            return inputs
-        done = self.io.read(out_table).select(key).distinct()
-        return inputs.join(done, key, "left_anti")
+    # stage threads run with the caller's job group, properties and tags
+    @inheritable_thread_target(spark)
+    def run(name: str, inputs: tuple[str, ...], build) -> DataFrame:
+        return materialize(name, lambda: build(*[table(i) for i in inputs]))
+
+    pending = list(stages)
+    running: dict[Future, str] = {}
+    failed: tuple[str, Exception] | None = None
+    with ThreadPoolExecutor(max_workers=max(len(stages), 1),
+                            thread_name_prefix="stage") as pool:
+        while pending or running:
+            for st in [st for st in pending
+                       if all(i not in names or i in done for i in st[1])]:
+                pending.remove(st)
+                running[pool.submit(run, *st)] = st[0]
+            if not running:
+                raise ValueError(f"stages {[st[0] for st in pending]} wait on each other")
+            finished, _ = wait(running, return_when=FIRST_COMPLETED)
+            for fut in finished:
+                name = running.pop(fut)
+                try:
+                    done[name] = fut.result()
+                except Exception as e:  # noqa: BLE001 - re-raised below
+                    failed = failed or (name, e)
+            if failed:
+                pending.clear()
+    if failed:
+        raise StageError(failed[0]) from failed[1]
+    return done

@@ -23,7 +23,8 @@ SMALL result relation:
 so the only thing that ever hits the block store / shuffle is bytes
 proportional to the extracted facts, not the corpus text. The caller
 computes sha256 JVM-side from the audit rows' extracted_text and drops the
-text column before materializing (pipeline.build_kg).
+text column before materializing (the `fused` stage of
+pipeline.kg_stages).
 
 Semantics are IDENTICAL to the staged operators and tested against them:
 extract per EXTRACT_SPEC v5 (operators/extract.py), sentence ids =

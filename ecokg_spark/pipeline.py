@@ -21,7 +21,9 @@ Shuffle budget of the whole plan (the thing that matters at 100 TB):
                             collapses the hot head entity pre-shuffle
   stats ................... hash aggs; degree count salted two-phase
 
-Every stage can materialize through StageRunner for mid-run resume.
+The dataflow is declared once, as the ordered stage list `kg_stages`, and
+run two ways through checkpoint.run_dag: `build_kg` materializes it in
+memory, and job.run_kg_job writes one durable, resumable table per stage.
 """
 
 from __future__ import annotations
@@ -29,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ecokg_spark.operators.checkpoint import Stage, run_dag
 from ecokg_spark.operators.components import canonical_map
 from ecokg_spark.operators.extract import extract_pages
 from ecokg_spark.operators.fused import (
@@ -54,6 +57,65 @@ from ecokg_spark.sources.pages import alias_table, category_table
 # free — no job, no checkpoint. ~30 MB of 3-string rows at the limit.
 RES_BROADCAST_MAX = 200_000
 
+# build_kg's in-memory policy checkpoints the stages several others read;
+# every other stage stays lazy and is computed by whoever reads it
+CHECKPOINTED = ("termlist", "fused", "canonical")
+
+
+def resolve_mentions(
+    surfaces: DataFrame, termlist: DataFrame, dim_count: int | None = None
+) -> DataFrame:
+    """Surface forms (col `mention`) -> the resolution table (mention,
+    curie, match_kind), evaluated exactly once.
+
+    The exact+fuzzy DAG runs over the DISTINCT surfaces only
+    (vocabulary-bounded, not corpus-sized). Its result is referenced by
+    several broadcast builds downstream, so take(N+1) both evaluates it once
+    and gates its size: vocabulary-sized results become a driver-local
+    relation (every later broadcast builds with NO job), oversized ones fall
+    back to a checkpoint. `dim_count` is link_mentions' size-gate hint."""
+    resolved, _unresolved = link_mentions(
+        surfaces.distinct(), termlist, "mention", dim_count=dim_count
+    )
+    res = resolved.select("mention", "curie", "match_kind")
+    sample = res.take(RES_BROADCAST_MAX + 1)
+    if len(sample) <= RES_BROADCAST_MAX:
+        return res.sparkSession.createDataFrame(sample, res.schema)
+    return res.localCheckpoint(eager=True)
+
+
+def apply_resolution(triples: DataFrame, res: DataFrame) -> DataFrame:
+    """Triples left-joined to the resolution table for both roles: adds
+    subj_curie/subj_match and obj_curie/obj_match, null where a mention did
+    not resolve. Two narrow broadcast joins — zero corpus-sized shuffle."""
+    s = res.select(
+        F.col("mention").alias("subj_mention"),
+        F.col("curie").alias("subj_curie"),
+        F.col("match_kind").alias("subj_match"),
+    )
+    o = res.select(
+        F.col("mention").alias("obj_mention"),
+        F.col("curie").alias("obj_curie"),
+        F.col("match_kind").alias("obj_match"),
+    )
+    return triples.join(F.broadcast(s), "subj_mention", "left").join(
+        F.broadcast(o), "obj_mention", "left"
+    )
+
+
+def quarantine_of(linked_raw: DataFrame) -> DataFrame:
+    """(url, sent_id, mention, role) for every unresolved subject/object."""
+    return (
+        linked_raw.where(F.col("subj_curie").isNull())
+        .select("url", "sent_id", F.col("subj_mention").alias("mention"),
+                F.lit("subject").alias("role"))
+        .unionByName(
+            linked_raw.where(F.col("obj_curie").isNull()).select(
+                "url", "sent_id", F.col("obj_mention").alias("mention"),
+                F.lit("object").alias("role"))
+        )
+    )
+
 
 def link_triples(
     triples: DataFrame,
@@ -66,249 +128,152 @@ def link_triples(
     materialized (mention, curie, match_kind) table, broadcast-applied
     here and reusable by any other mention-shaped relation.
 
-    Scale shape: the exact+fuzzy resolution DAG runs ONCE over the DISTINCT
-    surface forms of both roles (vocabulary-bounded, not corpus-sized); the
-    resolution table is then broadcast and applied to the corpus with two
-    narrow map-side joins. Resolving per-role over the full corpus instead
-    would re-run the multi-stage exact/fuzzy DAG per role — 4+ corpus passes
-    and 2x the shuffle stages (measured 2-3x slower at 60k pages).
-
-    `surfaces` (col `mention`), when given, is a pre-combined distinct
-    surface set (e.g. the fused pass's sent_id=-2 rows) — skips the
-    corpus-sized distinct here."""
+    Resolving ONCE over the distinct surfaces of both roles, then
+    broadcast-applying, beats resolving per role over the full corpus
+    (4+ corpus passes and 2x the shuffle stages; measured 2-3x slower at
+    60k pages). `surfaces` (col `mention`), when given, is a pre-combined
+    surface set — skips the corpus-sized distinct here."""
     if surfaces is None:
         surfaces = (
             triples.select(F.col("subj_mention").alias("mention"))
             .unionByName(triples.select(F.col("obj_mention").alias("mention")))
         )
-    surfaces = surfaces.distinct()
-    resolved, _unresolved = link_mentions(
-        surfaces, termlist, "mention", dim_count=dim_count
-    )
-    res = resolved.select("mention", "curie", "match_kind")
-    # evaluate the resolution DAG exactly ONCE (it is referenced by two
-    # broadcast builds below plus linked/quarantine — re-deriving it per
-    # consumer re-runs the whole exact/fuzzy DAG each time): take(N+1)
-    # doubles as the size gate. Vocabulary-sized results become a
-    # driver-local relation — every later broadcast builds with NO job —
-    # while oversized results fall back to a checkpoint.
-    sample = res.take(RES_BROADCAST_MAX + 1)
-    if len(sample) <= RES_BROADCAST_MAX:
-        res = triples.sparkSession.createDataFrame(sample, res.schema)
-    else:
-        res = res.localCheckpoint(eager=True)
-    s = res.select(
-        F.col("mention").alias("subj_mention"),
-        F.col("curie").alias("subj_curie"),
-        F.col("match_kind").alias("subj_match"),
-    )
-    o = res.select(
-        F.col("mention").alias("obj_mention"),
-        F.col("curie").alias("obj_curie"),
-        F.col("match_kind").alias("obj_match"),
-    )
-    j = triples.join(F.broadcast(s), "subj_mention", "left").join(
-        F.broadcast(o), "obj_mention", "left"
-    )
+    res = resolve_mentions(surfaces, termlist, dim_count)
+    j = apply_resolution(triples, res)
     linked = j.where(F.col("subj_curie").isNotNull() & F.col("obj_curie").isNotNull())
-    quarantine = (
-        j.where(F.col("subj_curie").isNull())
-        .select("url", "sent_id", F.col("subj_mention").alias("mention"),
-                F.lit("subject").alias("role"))
-        .unionByName(
-            j.where(F.col("obj_curie").isNull()).select(
-                "url", "sent_id", F.col("obj_mention").alias("mention"),
-                F.lit("object").alias("role"))
+    return linked, quarantine_of(j), res
+
+
+def kg_stages(
+    spark: SparkSession, pages: DataFrame, aliases: DataFrame | None = None
+) -> list[Stage]:
+    """The KG dataflow as one ordered (name, inputs, build) stage list.
+
+    termlist -> canonical is corpus-independent, so under run_dag it runs
+    concurrently with the fused corpus pass. `resolution` (mention, curie,
+    match_kind) materializes itself through resolve_mentions' size gate and
+    is never a table: linked_raw and edges both read it."""
+
+    def fused() -> DataFrame:
+        # ONE corpus pass (operators/fused.py): audit rows + matched triples
+        # + batch-combined mention and (s, v, o) rows. sha256 is computed
+        # JVM-side from the audit rows' text, then the text column is
+        # dropped — the materialized relation carries only facts.
+        return fused_extract_triples(pages).select(
+            "url", "sent_id", "subj_mention", "verb", "obj_mention", "n_sentences",
+            F.when(
+                F.col("sent_id") == AUDIT_SENT_ID,
+                F.sha2(F.encode(F.col("extracted_text"), "UTF-8"), 256),
+            ).alias("text_sha256"),
         )
-    )
-    return linked, quarantine, res
+
+    def triples(fused: DataFrame) -> DataFrame:
+        return fused.where(F.col("sent_id") >= 0).select(
+            "url", "sent_id", "subj_mention", "verb", "obj_mention")
+
+    def resolution(fused: DataFrame, termlist: DataFrame) -> DataFrame:
+        # linking's distinct-surfaces input: the fused pass's batch-combined
+        # mention rows (vocabulary-bounded), not a corpus-sized distinct;
+        # the termlist row count bounds the surface count for the fuzzy gate
+        surfaces = fused.where(F.col("sent_id") == MENTION_SENT_ID).select(
+            F.col("subj_mention").alias("mention"))
+        return resolve_mentions(surfaces, termlist, dim_count=termlist.count())
+
+    def edges(fused: DataFrame, res: DataFrame, canon: DataFrame) -> DataFrame:
+        # candidates are the fused pass's batch-distinct (s, v, o) combiner
+        # rows: the distinct edge SURFACE set is vocabulary-bounded, so every
+        # join below is dimension-sized and the per-sentence triple rows are
+        # never rescanned (a batchwise-distinct union aggregated by (s,p,o)
+        # equals the full distinct). The (s,p,o) dedup is ONE hash aggregate
+        # in merge_edges whose map-side partial collapses the hot subject
+        # before any shuffle, so salting here would only add a shuffle.
+        svo = fused.where(F.col("sent_id") == SVO_SENT_ID).select(
+            "subj_mention", "verb", "obj_mention")
+        canon_b = F.broadcast(canon)
+        raw = (
+            svo.join(F.broadcast(res.select(F.col("mention").alias("subj_mention"),
+                                            F.col("curie").alias("subj_curie"))),
+                     "subj_mention")
+            .join(F.broadcast(res.select(F.col("mention").alias("obj_mention"),
+                                         F.col("curie").alias("obj_curie"))),
+                  "obj_mention")
+            .join(canon_b.withColumnRenamed("node", "subj_curie")
+                  .withColumnRenamed("canonical", "subject"), "subj_curie")
+            .join(canon_b.withColumnRenamed("node", "obj_curie")
+                  .withColumnRenamed("canonical", "object"), "obj_curie")
+            .join(F.broadcast(verb_map(spark)), "verb")
+            .where(F.col("subject") != F.col("object"))  # self-loop drop (P5)
+            .select("subject", "predicate", "object", "relation",
+                    F.lit("ecokg-web").alias("provided_by"))
+        )
+        return merge_edges([raw])
+
+    def nodes(edges: DataFrame, canon: DataFrame) -> DataFrame:
+        # canonical entities seen in any edge + dim properties
+        cat = category_table(spark).join(F.broadcast(canon),
+                                          F.col("curie") == F.col("node"))
+        dim = (cat.groupBy("canonical")
+               .agg(F.min("curie").alias("curie"), F.min("name").alias("name"),
+                    F.min("category").alias("category"))
+               .select(F.col("canonical").alias("id"), "name", "category"))
+        seen = (edges.select(F.col("subject").alias("id"))
+                .unionByName(edges.select(F.col("object").alias("id"))).distinct())
+        return merge_nodes([
+            seen.join(F.broadcast(dim), "id", "left").select(
+                "id", "name", "category", F.lit("ecokg-web").alias("provided_by"))
+        ])
+
+    return [
+        ("fused", (), fused),
+        ("termlist", (), lambda: build_termlist(
+            aliases if aliases is not None else alias_table(spark))),
+        ("audit", ("fused",), lambda fused: fused.where(
+            F.col("sent_id") == AUDIT_SENT_ID).select("url", "text_sha256", "n_sentences")),
+        ("triples", ("fused",), triples),
+        ("canonical", ("termlist",), lambda termlist: canonical_map(
+            alias_identity_edges(termlist),
+            termlist.select(F.col("curie").alias("node")))),
+        ("resolution", ("fused", "termlist"), resolution),
+        ("linked_raw", ("fused", "resolution"),
+         lambda fused, res: apply_resolution(triples(fused), res)),
+        ("quarantine", ("linked_raw",), quarantine_of),
+        ("edges", ("fused", "resolution", "canonical"), edges),
+        ("nodes", ("edges", "canonical"), nodes),
+        ("stats_by_predicate", ("edges",), count_by_predicate),
+        ("stats_by_category", ("nodes",), count_by_category),
+    ]
 
 
 def build_kg(
     spark: SparkSession,
     pages: DataFrame,
     aliases: DataFrame | None = None,
-    materialize: bool = True,
-    materialize_linked: bool = True,
     scratch_dir: str | None = None,
 ) -> dict[str, DataFrame]:
-    """Run the full pipeline; returns every materializable stage output.
+    """Run the full pipeline in memory; returns every stage's output under
+    its stage name, plus the lazy `extracted` parity view.
 
-    `materialize=True` materializes the fused corpus pass so the many
-    downstream consumers (audit, linking, edges, stats) don't re-run
-    extraction. With `scratch_dir` set the materialization is a PARQUET
-    staged table (columnar: downstream readers get column pruning +
-    sent_id row-group pushdown — the Iceberg-table shape of the north
-    rule); otherwise an in-memory localCheckpoint. A durable-table
-    variant goes through StageRunner instead (job.py).
-    """
-    aliases = aliases if aliases is not None else alias_table(spark)
-    termlist = build_termlist(aliases)
-    if materialize:
-        termlist = termlist.localCheckpoint(eager=True)
+    termlist, fused and canonical are materialized once for their many
+    readers: the fused pass as a PARQUET staged table under `scratch_dir`
+    when given (columnar: readers get column pruning + sent_id row-group
+    pushdown), else, like the other two, an in-memory localCheckpoint.
+    resolution materializes itself through its size gate; everything else
+    is lazy. job.run_kg_job runs the same stage list with one durable table
+    per stage."""
 
-    # the dimension-only subgraph (termlist -> identity edges -> connected
-    # components) is independent of the corpus: overlap its driver barriers
-    # (count + collect + createDataFrame) with the fused corpus pass by
-    # submitting it from a second thread — Spark's scheduler runs the jobs
-    # concurrently, hiding ~1-3s of otherwise-serial latency per run
-    canon_future = None
-    if materialize:
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _vocab_side():
-            canon = canonical_map(
-                alias_identity_edges(termlist),
-                termlist.select(F.col("curie").alias("node")),
-            ).localCheckpoint(eager=True)
-            # termlist row count = free upper bound for the fuzzy-path
-            # size gate (saves link_mentions its own count job)
-            return canon, termlist.count()
-
-        _pool = ThreadPoolExecutor(1)
-        canon_future = _pool.submit(_vocab_side)
-        _pool.shutdown(wait=False)
-
-    # ONE corpus pass (operators/fused.py): audit rows + matched triples.
-    # sha256 is computed JVM-side from the audit rows' text, then the text
-    # column is dropped — the materialized relation carries only facts.
-    fused = fused_extract_triples(pages).select(
-        "url", "sent_id", "subj_mention", "verb", "obj_mention", "n_sentences",
-        F.when(
-            F.col("sent_id") == AUDIT_SENT_ID,
-            F.sha2(F.encode(F.col("extracted_text"), "UTF-8"), 256),
-        ).alias("text_sha256"),
-    )
-    if materialize:
-        if scratch_dir:
+    def materialize(name: str, build) -> DataFrame:
+        df = build()
+        if name == "fused" and scratch_dir:
             path = scratch_dir.rstrip("/") + "/fused"
-            fused.write.mode("overwrite").parquet(path)
-            fused = spark.read.parquet(path)
-        else:
-            fused = fused.localCheckpoint(eager=True)
-    audit = fused.where(F.col("sent_id") == AUDIT_SENT_ID).select(
-        "url", "text_sha256", "n_sentences"
-    )
-    triples = fused.where(F.col("sent_id") >= 0).select(
-        "url", "sent_id", "subj_mention", "verb", "obj_mention"
-    )
-    # canonicalization over the entity-identity graph (dimension-sized);
-    # normally precomputed concurrently with the fused pass (above)
-    if canon_future is not None:
-        canon, n_terms = canon_future.result()
-    else:
-        ident = alias_identity_edges(termlist)
-        all_entities = termlist.select(F.col("curie").alias("node"))
-        canon = canonical_map(ident, all_entities)  # (node, canonical)
-        n_terms = None
-    canon_b = F.broadcast(canon)
+            df.write.mode("overwrite").parquet(path)
+            return spark.read.parquet(path)
+        return df.localCheckpoint(eager=True) if name in CHECKPOINTED else df
 
-    # linking's distinct-surfaces input: the fused pass's batch-combined
-    # mention rows (vocabulary-bounded), not a corpus-sized distinct.
-    # materialize_linked=False callers act on edges/audit only, so the
-    # resolve DAG stays lazy and rides inside the edge-materialize job.
-    surfaces = fused.where(F.col("sent_id") == MENTION_SENT_ID).select(
-        F.col("subj_mention").alias("mention")
-    )
-    linked, quarantine, res = link_triples(
-        triples, termlist, surfaces=surfaces, dim_count=n_terms,
-    )
-    if materialize and materialize_linked:
-        # worth a barrier only when several downstream consumers will scan
-        # linked (stats + P/R + quarantine work); a single-consumer run
-        # (edges only) pipelines it from the fused table instead —
-        # broadcast application is narrow, so recompute is one cheap pass
-        linked = linked.localCheckpoint(eager=True)
-
-    vmap = F.broadcast(verb_map(spark))
-
-    # edge materialize consumes the fused pass's batch-distinct
-    # (subj, verb, obj) combiner rows — the distinct edge SURFACE set is
-    # vocabulary-bounded, so every join below is dimension-sized; the
-    # per-sentence triple rows are never rescanned for edges. Result is
-    # identical to resolving per-sentence rows (a batchwise-distinct union
-    # aggregated by (s,p,o) equals the full distinct).
-    svo = fused.where(F.col("sent_id") == SVO_SENT_ID).select(
-        "subj_mention", "verb", "obj_mention"
-    )
-    edges_raw = (
-        svo.join(
-            F.broadcast(res.select(F.col("mention").alias("subj_mention"),
-                                   F.col("curie").alias("subj_curie"))),
-            "subj_mention",
-        )
-        .join(
-            F.broadcast(res.select(F.col("mention").alias("obj_mention"),
-                                   F.col("curie").alias("obj_curie"))),
-            "obj_mention",
-        )
-        .join(canon_b.withColumnRenamed("node", "subj_curie")
-              .withColumnRenamed("canonical", "subject"), "subj_curie")
-        .join(canon_b.withColumnRenamed("node", "obj_curie")
-              .withColumnRenamed("canonical", "object"), "obj_curie")
-        .join(vmap, "verb")
-        .where(F.col("subject") != F.col("object"))  # self-loop drop (P5)
-    )
-    # (s,p,o) dedup happens inside merge_edges as ONE hash aggregate whose
-    # map-side partial collapses the hot subject before any shuffle — a
-    # partial agg is skew-immune, so salting here would only add a second
-    # full shuffle (salting IS load-bearing where rows of a hot key must
-    # meet un-collapsed: degree counts use salted_count, stats.py).
-    edges = edges_raw.select(
-        "subject",
-        "predicate",
-        "object",
-        "relation",
-        F.lit("ecokg-web").alias("provided_by"),
-    )
-
-    # node materialize: canonical entities seen in any edge + dim properties
-    cat = category_table(spark).join(canon_b, F.col("curie") == F.col("node"))
-    canon_dim = (
-        cat.groupBy("canonical")
-        .agg(F.min("curie").alias("curie"), F.min("name").alias("name"),
-             F.min("category").alias("category"))
-        .select(F.col("canonical").alias("id"), "name", "category")
-    )
-    seen = (
-        edges.select(F.col("subject").alias("id"))
-        .unionByName(edges.select(F.col("object").alias("id")))
-        .distinct()
-    )
-    nodes = seen.join(F.broadcast(canon_dim), "id", "left").select(
-        "id", "name", "category", F.lit("ecokg-web").alias("provided_by")
-    )
-
-    merged_nodes = merge_nodes([nodes])
-    merged_edges = merge_edges([edges])
-
-    return {
-        "termlist": termlist,
-        # lazy parity view (recomputes extraction on access; the pipeline
-        # itself never materializes corpus text — see fused pass above)
-        "extracted": extract_pages(pages),
-        "audit": audit,
-        "triples": triples,
-        "linked": linked,
-        "quarantine": quarantine,
-        "canonical": canon,
-        "nodes": merged_nodes,
-        "edges": merged_edges,
-        "stats_by_predicate": count_by_predicate(merged_edges),
-        "stats_by_category": count_by_category(merged_nodes),
-        # materialized intermediates, for callers that loop (bench):
-        # unpersist these or block-store pressure evicts + recomputes
-        "_materialized": [termlist, fused, linked],
-    }
-
-
-def release(out: dict) -> None:
-    """Unpersist a build_kg result's materialized blocks (bench hygiene)."""
-    for df in out.get("_materialized", []):
-        try:
-            df.unpersist(blocking=False)
-        except Exception:  # noqa: BLE001
-            pass
+    out = run_dag(spark, kg_stages(spark, pages, aliases), materialize)
+    # lazy parity view (recomputes extraction on access; the pipeline
+    # itself never materializes corpus text)
+    out["extracted"] = extract_pages(pages)
+    return out
 
 
 def release_all(spark: SparkSession) -> None:

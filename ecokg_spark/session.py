@@ -14,6 +14,13 @@ import os
 from pyspark.sql import SparkSession
 
 
+_SRC_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _phys_mb() -> int:
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+
+
 def get_spark(
     app_name: str = "ecokg-spark",
     master: str | None = None,
@@ -57,8 +64,16 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         # single-JVM local mode: the driver heap IS the executor heap; size it
         # for the block-manager storage pool (localCheckpoint blocks at bench
-        # scale) or stage outputs evict+recompute nondeterministically
-        .config("spark.driver.memory", os.environ.get("ECOKG_DRIVER_MEM", "32g"))
+        # scale) or stage outputs evict+recompute nondeterministically — but
+        # within the host: the JVM grows its heap toward -Xmx before it
+        # collects, and a heap past physical memory gets it OOM-killed
+        .config("spark.driver.memory",
+                os.environ.get("ECOKG_DRIVER_MEM", f"{min(32768, _phys_mb() // 2)}m"))
+        # Python workers fork from a daemon that makes the per-task import
+        # cache invalidation cheap (see ecokg_spark/pyworker_daemon.py); the
+        # daemon imports it from this source tree
+        .config("spark.python.daemon.module", "ecokg_spark.pyworker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _SRC_ROOT)
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

@@ -1,11 +1,18 @@
-"""Per-stage wall-clock profile of the KG pipeline (bench feedback loop).
+"""Per-stage wall-clock profile of the KG pipeline: the one stage list
+(pipeline.kg_stages) run with every stage materialized at its boundary.
 
 Usage: python scripts/profile_pipeline.py [n_pages] [cpus]
-Times each stage boundary separately so scaling bottlenecks are visible.
+       taskset -c 0-3 python scripts/profile_pipeline.py 1920000 4   # scaling
+
+Input is the bench corpus (bench.prepare_corpus parquet, written once per
+page count) with bench.run_pipeline_once's scan coalescing, after one
+warm-up build. Stages run concurrently as in production, so the per-stage
+times overlap; the last line is the same figures as JSON.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 import time
@@ -13,54 +20,36 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 n_pages = int(sys.argv[1]) if len(sys.argv) > 1 else 20000
-cpus = sys.argv[2] if len(sys.argv) > 2 else "32"
+cpus = int(sys.argv[2]) if len(sys.argv) > 2 else os.cpu_count()
 
-from ecokg_spark.session import get_spark
+import bench  # noqa: E402
+from ecokg_spark.operators.checkpoint import run_dag  # noqa: E402
+from ecokg_spark.pipeline import kg_stages, release_all  # noqa: E402
 
-spark = get_spark(app_name="profile", master=f"local[{cpus}]",
-                  shuffle_partitions=int(cpus))
-spark.sparkContext.setLogLevel("ERROR")
-
-from pyspark.sql import functions as F
-
-from ecokg_spark.operators.components import canonical_map
-from ecokg_spark.operators.extract import extract_pages, text_audit
-from ecokg_spark.operators.linking import (
-    alias_identity_edges, build_termlist, link_mentions,
-)
-from ecokg_spark.pipeline import build_kg, link_triples
-from ecokg_spark.operators.triples import extract_triples
-from ecokg_spark.sources.pages import alias_table, synth_pages
+spark = bench._spark(str(cpus))
+path = bench.prepare_corpus(spark, n_pages)
+bench.run_pipeline_once(spark, bench.prepare_corpus(spark, bench.WARMUP_PAGES, n_files=8), cpus)
 
 T: dict[str, float] = {}
 
 
-def clock(name):
-    def deco(fn):
-        t0 = time.time()
-        out = fn()
-        T[name] = round(time.time() - t0, 3)
-        print(f"{name:30s} {T[name]:8.3f}s", flush=True)
-        return out
-    return deco
+def materialize(name, build):
+    t0 = time.time()
+    df = build()
+    if name != "resolution":  # resolution materializes itself (size gate)
+        df = df.localCheckpoint(eager=True)
+    T[name] = round(time.time() - t0, 3)
+    return df
 
 
-pages = synth_pages(spark, n_pages).localCheckpoint(eager=True)
-t_all0 = time.time()
-
-termlist = clock("termlist")(lambda: build_termlist(alias_table(spark)).localCheckpoint(eager=True))
-extracted = clock("extract+materialize")(lambda: extract_pages(pages).localCheckpoint(eager=True))
-clock("audit_count")(lambda: text_audit(extracted).count())
-triples = clock("triples+materialize")(lambda: extract_triples(extracted).localCheckpoint(eager=True))
-linked = clock("link+materialize")(lambda: link_triples(triples, termlist)[0].localCheckpoint(eager=True))
-canon = clock("canonicalize")(lambda: canonical_map(
-    alias_identity_edges(termlist), termlist.select(F.col("curie").alias("node"))
-).localCheckpoint(eager=True))
-
-out = clock("build_kg(full, fresh)")(lambda: build_kg(spark, pages))
-clock("edges_count")(lambda: out["edges"].count())
-clock("audit_count2")(lambda: out["audit"].count())
-
-total = time.time() - t_all0
-print(f"{'TOTAL':30s} {total:8.3f}s   ({n_pages / (T['build_kg(full, fresh)'] + T['edges_count'] + T['audit_count2']):.1f} pages/s full)")
+pages = spark.read.parquet(path).coalesce(max(min(cpus, 16), 4))
+stages = kg_stages(spark, pages)
+t0 = time.time()
+run_dag(spark, stages, materialize)
+wall = round(time.time() - t0, 3)
+for name, _, _ in stages:
+    print(f"{name:20s} {T[name]:8.3f}s")
+print(f"{'wall':20s} {wall:8.3f}s   ({n_pages / wall:.1f} pages/s)")
+print(json.dumps({"cpus": cpus, "pages": n_pages, "wall": wall, "stages": T}))
+release_all(spark)
 spark.stop()

@@ -1,11 +1,16 @@
-"""Checkpoint/resume: stage materialization, lineage metrics, anti-join
-mid-stage resume, and crash/resume at every boundary of a stage DAG."""
+"""Checkpoint/resume: stage materialization, lineage metrics, crash/resume
+at every boundary of a stage DAG, and transient (never written) stages."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from ecokg_spark.io import TableIO
-from ecokg_spark.operators.checkpoint import StageError, StageRunner, partition_metrics
+from ecokg_spark.operators.checkpoint import (
+    StageError,
+    StageRunner,
+    partition_metrics,
+    run_dag,
+)
 
 
 @pytest.fixture()
@@ -41,17 +46,6 @@ def test_lineage_metrics_written(spark, io):
     assert {c for c in m.columns} >= {"stage", "run_id", "partition_id", "row_count",
                                       "key_fingerprint", "latency_s"}
     assert sum(x["row_count"] for x in rows) == 1000
-
-
-def test_anti_join_remaining(spark, io):
-    r = StageRunner(io, run_id="t1", resume=True)
-    inputs = spark.range(10).select(F.col("id").alias("k"))
-    # nothing done yet -> everything remains
-    assert r.anti_join_remaining(inputs, "stage_x", "k").count() == 10
-    # half done -> only the other half remains
-    io.write(spark.range(5).select(F.col("id").alias("k")), "kg.stage_x")
-    rem = {x["k"] for x in r.anti_join_remaining(inputs, "stage_x", "k").collect()}
-    assert rem == {5, 6, 7, 8, 9}
 
 
 # _dag's stages: a -> (b, c) -> d
@@ -140,3 +134,36 @@ def test_failed_stage_is_named_and_committed_stages_resume(spark, io, clean):
 def test_stage_inputs_must_be_listed_first(io):
     with pytest.raises(ValueError, match="'a'"):
         StageRunner(io, run_id="t1").run_stages([("b", ("a",), lambda a: a)])
+
+
+def test_transient_stage_is_no_table_and_runs_only_when_read(spark, io, clean):
+    calls = []
+    stages = _dag(spark)
+    build_b = stages[1][2]
+    stages[1] = ("b", ("a",), lambda a: calls.append("b") or build_b(a))
+    r = StageRunner(io, run_id="t1")
+    r.run_stages(stages, transient={"b"})
+    assert set(r.timings) == {"a", "c", "d"} and calls == ["b"]
+    assert not io.exists("kg.b") and not r.committed("b")
+    assert sorted(map(tuple, io.read("kg.d").collect())) == clean["d"]
+    # committed readers: b never runs
+    r = StageRunner(io, run_id="t2")
+    r.run_stages(stages, transient={"b"})
+    assert r.timings == {} and calls == ["b"]
+    # c recomputes, so d does, and d needs b
+    io.drop("kg._checkpoints.c")
+    r = StageRunner(io, run_id="t3")
+    r.run_stages(stages, transient={"b"})
+    assert set(r.timings) == {"c", "d"} and calls == ["b", "b"]
+    # a recomputes: through b, d does too
+    io.drop("kg._checkpoints.a")
+    r = StageRunner(io, run_id="t4")
+    r.run_stages(stages, transient={"b"})
+    assert set(r.timings) == {"a", "c", "d"} and calls == ["b"] * 3
+    assert sorted(map(tuple, io.read("kg.d").collect())) == clean["d"]
+
+
+def test_run_dag_rejects_a_cycle(spark):
+    with pytest.raises(ValueError, match="wait on each other"):
+        run_dag(spark, [("a", ("b",), lambda b: b), ("b", ("a",), lambda a: a)],
+                lambda name, build: build())

@@ -27,6 +27,13 @@ def _last_job_id(spark, group: str) -> int:
     return max(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def _assert_same_rows(got, want, stage: str) -> None:
+    assert got.columns == want.columns, stage
+    assert got.count() == want.count(), stage
+    assert got.exceptAll(want).count() == 0, stage
+    assert want.exceptAll(got).count() == 0, stage
+
+
 def test_job_runs_resumes_and_matches_pipeline(spark, tmp_path):
     wh = str(tmp_path / "wh")
     pages = synth_pages(spark, N).localCheckpoint(eager=True)
@@ -34,14 +41,12 @@ def test_job_runs_resumes_and_matches_pipeline(spark, tmp_path):
 
     r1 = run_kg_job(spark, pages, io, run_id="t1")
     assert set(r1.timings) == set(STAGES)
-    edges = io.read("kg.edges")
-    n_edges = edges.count()
+    n_edges = io.read("kg.edges").count()
     assert n_edges > 0
-    # stage outputs match the in-memory pipeline exactly
+    # every stage table matches the in-memory pipeline's stage output exactly
     mem = build_kg(spark, pages)
-    assert edges.select("subject", "predicate", "object").exceptAll(
-        mem["edges"].select("subject", "predicate", "object")).count() == 0
-    assert mem["edges"].count() == n_edges
+    for stage in STAGES:
+        _assert_same_rows(io.read(f"kg.{stage}"), mem[stage], stage)
 
     # lineage metrics exist per stage partition
     m = io.read("kg._checkpoints.edges")
@@ -65,7 +70,9 @@ def test_job_runs_resumes_and_matches_pipeline(spark, tmp_path):
     r3 = run_kg_job(spark, pages, io, run_id="t3")
     assert set(r3.timings) == {"edges", "nodes", "stats_by_predicate",
                                "stats_by_category"}
-    assert io.read("kg.edges").count() == n_edges
+    # edges recomputed from the read-back fused and termlist tables, through
+    # a resolution recomputed from them
+    _assert_same_rows(io.read("kg.edges"), mem["edges"], "edges")
 
 
 def test_tableio_merge_into_upsert_and_insert_only(spark, tmp_path):

@@ -160,7 +160,6 @@ def test_fused_edge_path_single_exchange(spark, tmp_path):
     from ecokg_spark.sources.pages import synth_pages
 
     out = build_kg(spark, synth_pages(spark, 40),
-                   materialize_linked=False,
                    scratch_dir=str(tmp_path / "scratch"))
     edges = out["edges"]
     plan = physical_plan(edges)
