@@ -26,7 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 _REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, _REPO)
 
-from ecokg_spark.contract import ORACLES, QUERIES, q_kg_materialize  # noqa: E402
+from ecokg_spark.contract import ORACLES, QUERIES  # noqa: E402
+from ecokg_spark.contract.kgflow import q_kg_materialize  # noqa: E402
 
 _PYFILES_ADDED: set[str] = set()
 

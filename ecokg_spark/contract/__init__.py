@@ -1,15 +1,18 @@
 """Driver-contract query registry: Spark queries + DuckDB oracle SQL.
 
-One entry per implemented operator family from SURVEY.md §2 plus the
-training-data toolkit. Each Spark callable takes (spark, sf_dir) and reads
-the driver's parquet tables; the oracle string is the same computation in
-DuckDB SQL over pre-registered views. Column names and types are aligned on
-both sides (aggregates computed through DECIMAL so float sums are exact and
-bit-identical across engines).
+One row per implemented operator family from SURVEY.md §2 plus the
+training-data toolkit, declared once in ``_ROWS`` as ``(name, query,
+oracle)``. Each Spark callable takes (spark, sf_dir) and reads the driver's
+parquet tables; the oracle string is the same computation in DuckDB SQL
+over pre-registered views. Column names and types are aligned on both
+sides (aggregates computed through DECIMAL so float sums are exact and
+bit-identical across engines), and every output column is a scalar.
 
-Every registry entry has an oracle (209/209 as of round 5): seemingly
-non-SQL ops (MinHash-LSH, SimHash, ANN-LSH, the full KG pipeline) pin
-portable hash/arithmetic specs that DuckDB recomputes verbatim.
+Every row has an oracle by construction: seemingly non-SQL ops
+(MinHash-LSH, SimHash, ANN-LSH, the full KG pipeline) pin portable
+hash/arithmetic specs that DuckDB recomputes verbatim. The queries and
+SQL live in the domain modules; this package exports only ``QUERIES``,
+``ORACLES`` and ``_CERT_WINDOW``.
 """
 
 from __future__ import annotations
@@ -18,960 +21,308 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ecokg_spark.contract._shared import (  # noqa: F401
-    t,
-    dec_sum,
-    _NORM_SQL,
-    _PUNCT_SQL,
-    _marker_sql,
-    _LOWTOK_SQL,
-    _TOKCNT_SQL,
-    _HEX15,
-    _SHINGLE_SQL,
-    _synth_url_rich,
-    _SYNTH_URL_RICH_SQL,
-    _SQL_URL_PARTS,
-    _SQL_2L_SUFFIXES,
-    _SQL_REG_DOMAIN,
-    _SQL_KEPT_Q,
-    _SQL_CANONICAL,
-    _sql_kmeans_assign,
-    _sql_kmeans_update,
+from ecokg_spark.contract import (
+    dedup,
+    embed,
+    graph,
+    kgflow,
+    kgqc,
+    media,
+    relational,
+    sampling,
+    sketch,
+    sparql,
+    streaming,
+    temporal,
+    textops,
+    web,
 )
-from ecokg_spark.contract.dedup import (  # noqa: F401
-    q_fuzzy_string_join,
-    SQL_FUZZY_STRING_JOIN,
-    q_exact_dedup,
-    SQL_EXACT_DEDUP,
-    q_ngram_jaccard,
-    SQL_NGRAM_JACCARD,
-    q_line_dedup,
-    SQL_LINE_DEDUP,
-    q_minhash_neardup,
-    SQL_MINHASH_NEARDUP,
-    q_minhash_banded,
-    SQL_MINHASH_BANDED,
-    q_incremental_dedup,
-    _sql_incremental_dedup,
-    SQL_INCREMENTAL_DEDUP,
-    q_fuzzy_dedup,
-    SQL_FUZZY_DEDUP,
-    q_simhash_neardup,
-    _TOK_SQL,
-    SQL_SIMHASH_NEARDUP,
-    q_embedding_neardup,
-    SQL_EMBEDDING_NEARDUP,
-    q_paragraph_dedup,
-    SQL_PARAGRAPH_DEDUP,
-    q_semantic_dedup,
-    SQL_SEMANTIC_DEDUP,
-    q_containment,
-    SQL_CONTAINMENT,
-    _SPAM_BLOCK,
-    q_dup_span_removal,
-    SQL_DUP_SPAN_REMOVAL,
-    q_semdedup_kmeans,
-    SQL_SEMDEDUP_KMEANS,
-    q_winnow_fp,
-    _WN,
-    SQL_WINNOW_FP,
-)
-from ecokg_spark.contract.embed import (  # noqa: F401
-    q_group_centroids,
-    SQL_GROUP_CENTROIDS,
-    q_cosine_topk,
-    SQL_COSINE_TOPK,
-    q_ann_ivf_topk,
-    q_ann_lsh_topk,
-    _hashed_embed_sql,
-    SQL_HASHED_EMBED,
-    q_hashed_embed,
-    q_kmeans,
-    SQL_KMEANS,
-    q_int8_quantize,
-    SQL_INT8_QUANTIZE,
-    q_int8_topk,
-    SQL_INT8_TOPK,
-    q_cluster_topics,
-    SQL_CLUSTER_TOPICS,
-)
-from ecokg_spark.contract.graph import (  # noqa: F401
-    q_connected_components,
-    SQL_CONNECTED_COMPONENTS,
-    q_pagerank,
-    _pagerank_sql,
-    SQL_PAGERANK,
-    q_triangle_count,
-    SQL_TRIANGLE_COUNT,
-    q_shortest_path,
-    SQL_SHORTEST_PATH,
-    q_hits,
-    _hits_sql,
-    SQL_HITS,
-    q_label_prop,
-    _label_prop_sql,
-    SQL_LABEL_PROP,
-    q_kcore,
-    _kcore_sql,
-    SQL_KCORE,
-    q_ppr,
-    _ppr_sql,
-    SQL_PPR,
-    q_adamic_adar,
-    SQL_ADAMIC_ADAR,
-    q_hash_walks,
-    _hash_walks_sql,
-    SQL_HASH_WALKS,
-    q_degree_histogram,
-    SQL_DEGREE_HISTOGRAM,
-    q_tc_reachability,
-    SQL_TC_REACHABILITY,
-    q_rdfs_closure,
-    SQL_RDFS_CLOSURE,
-    q_hyperball,
-    _sql_hyperball,
-    SQL_HYPERBALL,
-    q_hierarchy_cycles,
-    SQL_HIERARCHY_CYCLES,
-    q_distance_distribution,
-    SQL_DISTANCE_DISTRIBUTION,
-    q_harmonic_centrality,
-    SQL_HARMONIC_CENTRALITY,
-    q_assortativity,
-    SQL_ASSORTATIVITY,
-)
-from ecokg_spark.contract.kgflow import (  # noqa: F401
-    q_count_by_category,
-    SQL_COUNT_BY_CATEGORY,
-    q_semi_join,
-    SQL_SEMI_JOIN,
-    q_anti_join,
-    SQL_ANTI_JOIN,
-    q_first_wins,
-    SQL_FIRST_WINS,
-    q_union_merge,
-    SQL_UNION_MERGE,
-    q_rollup_stats,
-    SQL_ROLLUP_STATS,
-    q_count_by_spo,
-    SQL_COUNT_BY_SPO,
-    q_curate_v3,
-    _sql_curate_v3,
-    SQL_CURATE_V3,
-    q_extract_html,
-    SQL_EXTRACT_HTML,
-    q_triple_extract,
-    SQL_TRIPLE_EXTRACT,
-    q_entity_link,
-    SQL_ENTITY_LINK,
-    q_link_ambiguity,
-    SQL_LINK_AMBIGUITY,
-    q_termlist_explode,
-    SQL_TERMLIST_EXPLODE,
-    q_kgx_merge,
-    SQL_KGX_MERGE,
-    q_kg_materialize,
-    SQL_KG_MATERIALIZE,
-    q_gaf_transform,
-    SQL_GAF_TRANSFORM,
-    q_eol_hierarchy,
-    SQL_EOL_HIERARCHY,
-    q_gea_transform,
-    SQL_GEA_TRANSFORM,
-    q_gaf_germplasm,
-    SQL_GAF_GERMPLASM,
-    q_gaf_qtl,
-    SQL_GAF_QTL,
-    q_gaf_orthologs,
-    SQL_GAF_ORTHOLOGS,
-    q_eol_traits,
-    SQL_EOL_TRAITS,
-    q_ontology_transform,
-    SQL_ONTOLOGY_TRANSFORM,
-    q_curate_corpus,
-    _sql_curate_corpus,
-    SQL_CURATE_CORPUS,
-    q_kg_pipeline,
-    _sql_kg_pipeline,
-    SQL_KG_PIPELINE,
-    q_curate_v2,
-    _curate_v2_sql,
-    SQL_CURATE_V2,
-)
-from ecokg_spark.contract.kgqc import (  # noqa: F401
-    q_kg_diff,
-    SQL_KG_DIFF,
-    q_kgx_validate,
-    SQL_KGX_VALIDATE,
-    _kgqc_edges,
-    q_predicate_profile,
-    SQL_PREDICATE_PROFILE,
-    _inverse_edges,
-    q_inverse_detect,
-    SQL_INVERSE_DETECT,
-    q_kg_negatives,
-    _H60T,
-    _H60E,
-    SQL_KG_NEGATIVES,
-    q_kg_negatives_head,
-    _H60T2,
-    _H60E2,
-    SQL_KG_NEGATIVES_HEAD,
-)
-from ecokg_spark.contract.media import (  # noqa: F401
-    q_audio_chunks,
-    SQL_AUDIO_CHUNKS,
-    q_media_features,
-    SQL_MEDIA_FEATURES,
-    q_frame_sample,
-    SQL_FRAME_SAMPLE,
-)
-from ecokg_spark.contract.relational import (  # noqa: F401
-    q_pricing_summary,
-    SQL_PRICING,
-    q_filter_project,
-    SQL_FILTER_PROJECT,
-    q_broadcast_join_agg,
-    SQL_BROADCAST_JOIN_AGG,
-    q_multi_join,
-    SQL_MULTI_JOIN,
-    q_explode_tokens,
-    SQL_EXPLODE_TOKENS,
-    q_window_topk,
-    SQL_WINDOW_TOPK,
-    q_topk_limit,
-    SQL_TOPK_LIMIT,
-    q_case_chain,
-    SQL_CASE_CHAIN,
-    q_string_funcs,
-    SQL_STRING_FUNCS,
-    q_curie_ops,
-    SQL_CURIE_OPS,
-    q_priority_coalesce,
-    SQL_PRIORITY_COALESCE,
-    q_json_extract,
-    SQL_JSON_EXTRACT,
-    q_repetition_ratio,
-    SQL_REPETITION_RATIO,
-    q_dup_ngram_ratio,
-    SQL_DUP_NGRAM_RATIO,
-    q_bpe_token_count,
-    SQL_BPE_TOKEN_COUNT,
-    q_fingerprint,
-    SQL_FINGERPRINT,
-    q_dup_spans,
-    SQL_DUP_SPANS,
-    q_decontam,
-    SQL_DECONTAM,
-    q_url_dedup,
-    SQL_URL_DEDUP,
-    q_domain_stats,
-    SQL_DOMAIN_STATS,
-    q_domain_quota,
-    SQL_DOMAIN_QUOTA,
-    q_graph_two_hop,
-    SQL_GRAPH_TWO_HOP,
-    q_multimodal_meta,
-    SQL_MULTIMODAL_META,
-    q_multimodal_dims,
-    SQL_MULTIMODAL_DIMS,
-    q_media_resize_plan,
-    SQL_MEDIA_RESIZE_PLAN,
-    q_clustering_coeff,
-    SQL_CLUSTERING_COEFF,
-    q_cooccur_pmi,
-    SQL_COOCCUR_PMI,
-)
-from ecokg_spark.contract.sampling import (  # noqa: F401
-    q_stratified_sample,
-    _sql_stratified_sample,
-    SQL_STRATIFIED_SAMPLE,
-    q_vocab_topk,
-    SQL_VOCAB_TOPK,
-    q_stupid_backoff,
-    SQL_STUPID_BACKOFF,
-    q_bpe_pairs,
-    SQL_BPE_PAIRS,
-    q_fixed_sample,
-    SQL_FIXED_SAMPLE,
-    q_pack_sequences,
-    SQL_PACK_SEQUENCES,
-    q_hash_sample,
-    _sql_hash_sample,
-    SQL_HASH_SAMPLE,
-    q_bigram_lm,
-    SQL_BIGRAM_LM,
-    q_dsir_weights,
-    SQL_DSIR_WEIGHTS,
-    q_temperature_mix,
-    SQL_TEMPERATURE_MIX,
-    q_chunk_sliding,
-    SQL_CHUNK_SLIDING,
-    q_group_sample,
-    SQL_GROUP_SAMPLE,
-)
-from ecokg_spark.contract.sketch import (  # noqa: F401
-    q_hll_distinct,
-    _sql_hll_distinct,
-    SQL_HLL_DISTINCT,
-    q_bloom_probe,
-    _sql_bloom_probe,
-    SQL_BLOOM_PROBE,
-    q_count_min,
-    _sql_count_min,
-    SQL_COUNT_MIN,
-)
-from ecokg_spark.contract.sparql import (  # noqa: F401
-    q_sparql_sink_error,
-    SQL_SPARQL_SINK_ERROR,
-    q_sparql_offset,
-    SQL_SPARQL_OFFSET,
-    q_sparql_select,
-    SQL_SPARQL_SELECT,
-    _kg_tables_from_part,
-    q_sparql_filter,
-    SQL_SPARQL_FILTER,
-    q_sparql_distinct,
-    SQL_SPARQL_DISTINCT,
-    q_sparql_optional,
-    SQL_SPARQL_OPTIONAL,
-    q_sparql_order_limit,
-    SQL_SPARQL_ORDER_LIMIT,
-    q_sparql_union,
-    SQL_SPARQL_UNION,
-    q_sparql_values,
-    SQL_SPARQL_VALUES,
-    _tree_edges_from_nation,
-    q_sparql_path_seq,
-    SQL_SPARQL_PATH_SEQ,
-    q_sparql_path_plus,
-    SQL_SPARQL_PATH_PLUS,
-    q_sparql_path_star,
-    SQL_SPARQL_PATH_STAR,
-    q_sparql_path_inverse,
-    SQL_SPARQL_PATH_INVERSE,
-    q_sparql_path_alt,
-    SQL_SPARQL_PATH_ALT,
-    q_sparql_not_exists,
-    SQL_SPARQL_NOT_EXISTS,
-    q_sparql_agg,
-    SQL_SPARQL_AGG,
-    q_sparql_bind,
-    SQL_SPARQL_BIND,
-    q_sparql_group_concat,
-    SQL_SPARQL_GROUP_CONCAT,
-    q_sparql_group_expr,
-    SQL_SPARQL_GROUP_EXPR,
-    q_sparql_order_multi,
-    SQL_SPARQL_ORDER_MULTI,
-    q_sparql_optional_filter,
-    SQL_SPARQL_OPTIONAL_FILTER,
-    _kg_tables_part_sized,
-    q_sparql_exists,
-    SQL_SPARQL_EXISTS,
-    q_sparql_minus,
-    SQL_SPARQL_MINUS,
-    q_sparql_sum_avg,
-    SQL_SPARQL_SUM_AVG,
-    q_sparql_having,
-    SQL_SPARQL_HAVING,
-    q_sparql_ask,
-    SQL_SPARQL_ASK,
-    q_sparql_construct,
-    SQL_SPARQL_CONSTRUCT,
-    q_sparql_count_star,
-    SQL_SPARQL_COUNT_STAR,
-    q_sparql_filter_cmp,
-    SQL_SPARQL_FILTER_CMP,
-    q_sparql_regex,
-    SQL_SPARQL_REGEX,
-    q_sparql_neg_path,
-    SQL_SPARQL_NEG_PATH,
-    q_sparql_subquery,
-    SQL_SPARQL_SUBQUERY,
-    q_sparql_values_multi,
-    SQL_SPARQL_VALUES_MULTI,
-    q_sparql_sample,
-    SQL_SPARQL_SAMPLE,
-    q_sparql_strfuncs,
-    SQL_SPARQL_STRFUNCS,
-    q_sparql_in,
-    SQL_SPARQL_IN,
-    q_sparql_describe,
-    SQL_SPARQL_DESCRIBE,
-    q_sparql_bind_if,
-    SQL_SPARQL_BIND_IF,
-    q_sparql_values_undef,
-    SQL_SPARQL_VALUES_UNDEF,
-)
-from ecokg_spark.contract.streaming import (  # noqa: F401
-    _STREAM_SEQ,
-    q_events_window_streaming,
-    q_sessionize_streaming,
-    q_hll_stream,
-    q_curate_stream,
-    q_dedup_stream,
-    SQL_DEDUP_STREAM,
-    q_join_stream,
-    SQL_JOIN_STREAM,
-)
-from ecokg_spark.contract.temporal import (  # noqa: F401
-    q_events_window,
-    SQL_EVENTS_WINDOW,
-    q_sessionize,
-    SQL_SESSIONIZE,
-    q_asof_join,
-    SQL_ASOF_JOIN,
-    q_range_join_agg,
-    SQL_RANGE_JOIN_AGG,
-    q_rolling_zscore,
-    SQL_ROLLING_ZSCORE,
-    q_scd2_history,
-    SQL_SCD2_HISTORY,
-    q_interval_merge,
-    SQL_INTERVAL_MERGE,
-    q_rollup_cube,
-    SQL_ROLLUP_CUBE,
-    q_pivot_events,
-    SQL_PIVOT_EVENTS,
-    q_ts_multi,
-    SQL_TS_MULTI,
-    q_mad_outliers,
-    SQL_MAD_OUTLIERS,
-    q_funnel,
-    SQL_FUNNEL,
-    q_event_transitions,
-    SQL_EVENT_TRANSITIONS,
-    q_retention,
-    SQL_RETENTION,
-)
-from ecokg_spark.contract.textops import (  # noqa: F401
-    q_token_count,
-    SQL_TOKEN_COUNT,
-    q_quality_buckets,
-    SQL_QUALITY_BUCKETS,
-    q_lang_id,
-    SQL_LANG_ID,
-    q_quality_logit,
-    SQL_QUALITY_LOGIT,
-    q_c4_rules,
-    _C4_KEEP_SQL,
-    SQL_C4_RULES,
-    q_gopher_rules,
-    SQL_GOPHER_RULES,
-    q_length_quartiles,
-    SQL_LENGTH_QUARTILES,
-    q_pii_redact,
-    _sql_pii_redact,
-    SQL_PII_REDACT,
-    q_tfidf_topk,
-    SQL_TFIDF_TOPK,
-    q_word_entropy,
-    SQL_WORD_ENTROPY,
-    q_flesch_score,
-    _W_SQL,
-    SQL_FLESCH_SCORE,
-    q_jsonl_corrupt,
-    SQL_JSONL_CORRUPT,
-    q_nfc_normalize,
-    SQL_NFC_NORMALIZE,
-)
-from ecokg_spark.contract.web import (  # noqa: F401
-    q_url_parse,
-    SQL_URL_PARSE,
-    q_url_blocklist,
-    SQL_URL_BLOCKLIST,
-    q_host_graph,
-    SQL_HOST_GRAPH,
-    q_anchor_topk,
-    SQL_ANCHOR_TOPK,
-    q_redirect_resolve,
-    SQL_REDIRECT_RESOLVE,
-    q_canonical_meta,
-    SQL_CANONICAL_META,
-    _synth_robots,
-    q_robots_rules,
-    SQL_ROBOTS_RULES,
-    q_robots_check,
-    SQL_ROBOTS_CHECK,
-    q_web_canonical_dedup,
-    SQL_WEB_CANONICAL_DEDUP,
-    q_surt_keys,
-    SQL_SURT_KEYS,
-    q_crawl_frontier,
-    SQL_CRAWL_FRONTIER,
-    q_host_boilerplate,
-    SQL_HOST_BOILERPLATE,
-    q_sitemap_urls,
-    SQL_SITEMAP_URLS,
-    q_strip_boilerplate,
-    SQL_STRIP_BOILERPLATE,
-    q_recrawl_priority,
-    SQL_RECRAWL_PRIORITY,
-    q_crawl_lifecycle,
-    SQL_CRAWL_LIFECYCLE,
-    q_robots_delay,
-    SQL_ROBOTS_DELAY,
-)
+
+# Table order is registry order: scripts/plan_rotation.py reads it as
+# certification age, and the driver certifies the first 50 rows after
+# _window_order moves _CERT_WINDOW to the head.
+_ROWS: list[tuple[str, Callable[[SparkSession, str], DataFrame], str]] = [
+    ("pricing_summary", relational.q_pricing_summary, relational.SQL_PRICING),
+    ("count_by_category", kgflow.q_count_by_category,
+     kgflow.SQL_COUNT_BY_CATEGORY),
+    ("filter_project", relational.q_filter_project,
+     relational.SQL_FILTER_PROJECT),
+    ("semi_join", kgflow.q_semi_join, kgflow.SQL_SEMI_JOIN),
+    ("anti_join", kgflow.q_anti_join, kgflow.SQL_ANTI_JOIN),
+    ("broadcast_join_agg", relational.q_broadcast_join_agg,
+     relational.SQL_BROADCAST_JOIN_AGG),
+    ("multi_join", relational.q_multi_join, relational.SQL_MULTI_JOIN),
+    ("explode_tokens", relational.q_explode_tokens,
+     relational.SQL_EXPLODE_TOKENS),
+    ("first_wins", kgflow.q_first_wins, kgflow.SQL_FIRST_WINS),
+    ("union_merge", kgflow.q_union_merge, kgflow.SQL_UNION_MERGE),
+    ("window_topk", relational.q_window_topk, relational.SQL_WINDOW_TOPK),
+    ("topk_limit", relational.q_topk_limit, relational.SQL_TOPK_LIMIT),
+    ("case_chain", relational.q_case_chain, relational.SQL_CASE_CHAIN),
+    ("string_funcs", relational.q_string_funcs, relational.SQL_STRING_FUNCS),
+    ("curie_ops", relational.q_curie_ops, relational.SQL_CURIE_OPS),
+    ("priority_coalesce", relational.q_priority_coalesce,
+     relational.SQL_PRIORITY_COALESCE),
+    ("rollup_stats", kgflow.q_rollup_stats, kgflow.SQL_ROLLUP_STATS),
+    ("sparql_sink_error", sparql.q_sparql_sink_error,
+     sparql.SQL_SPARQL_SINK_ERROR),
+    ("json_extract", relational.q_json_extract, relational.SQL_JSON_EXTRACT),
+    ("count_by_spo", kgflow.q_count_by_spo, kgflow.SQL_COUNT_BY_SPO),
+    ("events_window", temporal.q_events_window, temporal.SQL_EVENTS_WINDOW),
+    ("events_window_streaming", streaming.q_events_window_streaming,
+     temporal.SQL_EVENTS_WINDOW),  # stream == batch agg
+    ("sessionize", temporal.q_sessionize, temporal.SQL_SESSIONIZE),
+    ("asof_join", temporal.q_asof_join, temporal.SQL_ASOF_JOIN),
+    ("range_join_agg", temporal.q_range_join_agg, temporal.SQL_RANGE_JOIN_AGG),
+    ("sessionize_streaming", streaming.q_sessionize_streaming,
+     temporal.SQL_SESSIONIZE),  # drained stream == batch lag
+    ("token_count", textops.q_token_count, textops.SQL_TOKEN_COUNT),
+    ("quality_buckets", textops.q_quality_buckets,
+     textops.SQL_QUALITY_BUCKETS),
+    ("lang_id", textops.q_lang_id, textops.SQL_LANG_ID),
+    ("repetition_ratio", relational.q_repetition_ratio,
+     relational.SQL_REPETITION_RATIO),
+    ("dup_ngram_ratio", relational.q_dup_ngram_ratio,
+     relational.SQL_DUP_NGRAM_RATIO),
+    ("bpe_token_count", relational.q_bpe_token_count,
+     relational.SQL_BPE_TOKEN_COUNT),
+    ("gopher_rules", textops.q_gopher_rules, textops.SQL_GOPHER_RULES),
+    ("fingerprint", relational.q_fingerprint, relational.SQL_FINGERPRINT),
+    ("exact_dedup", dedup.q_exact_dedup, dedup.SQL_EXACT_DEDUP),
+    ("ngram_jaccard", dedup.q_ngram_jaccard, dedup.SQL_NGRAM_JACCARD),
+    ("dup_spans", relational.q_dup_spans, relational.SQL_DUP_SPANS),
+    ("decontam", relational.q_decontam, relational.SQL_DECONTAM),
+    ("length_quartiles", textops.q_length_quartiles,
+     textops.SQL_LENGTH_QUARTILES),
+    ("line_dedup", dedup.q_line_dedup, dedup.SQL_LINE_DEDUP),
+    ("url_parse", web.q_url_parse, web.SQL_URL_PARSE),
+    ("url_dedup", relational.q_url_dedup, relational.SQL_URL_DEDUP),
+    ("domain_stats", relational.q_domain_stats, relational.SQL_DOMAIN_STATS),
+    ("pii_redact", textops.q_pii_redact, textops.SQL_PII_REDACT),
+    ("hash_sample", sampling.q_hash_sample, sampling.SQL_HASH_SAMPLE),
+    ("domain_quota", relational.q_domain_quota, relational.SQL_DOMAIN_QUOTA),
+    ("minhash_neardup", dedup.q_minhash_neardup, dedup.SQL_MINHASH_NEARDUP),
+    ("minhash_banded", dedup.q_minhash_banded, dedup.SQL_MINHASH_BANDED),
+    ("simhash_neardup", dedup.q_simhash_neardup, dedup.SQL_SIMHASH_NEARDUP),
+    ("cosine_topk", embed.q_cosine_topk, embed.SQL_COSINE_TOPK),
+    ("embedding_neardup", dedup.q_embedding_neardup,
+     dedup.SQL_EMBEDDING_NEARDUP),
+    ("ann_lsh_topk", embed.q_ann_lsh_topk,
+     embed.SQL_COSINE_TOPK),  # exhaustive LSH == exact top-k
+    ("ann_ivf_topk", embed.q_ann_ivf_topk,
+     embed.SQL_COSINE_TOPK),  # exhaustive IVF == exact top-k
+    ("extract_html", kgflow.q_extract_html, kgflow.SQL_EXTRACT_HTML),
+    ("triple_extract", kgflow.q_triple_extract, kgflow.SQL_TRIPLE_EXTRACT),
+    ("entity_link", kgflow.q_entity_link, kgflow.SQL_ENTITY_LINK),
+    ("link_ambiguity", kgflow.q_link_ambiguity, kgflow.SQL_LINK_AMBIGUITY),
+    ("termlist_explode", kgflow.q_termlist_explode,
+     kgflow.SQL_TERMLIST_EXPLODE),
+    ("connected_components", graph.q_connected_components,
+     graph.SQL_CONNECTED_COMPONENTS),
+    ("kgx_merge", kgflow.q_kgx_merge, kgflow.SQL_KGX_MERGE),
+    ("kg_materialize", kgflow.q_kg_materialize, kgflow.SQL_KG_MATERIALIZE),
+    ("gaf_transform", kgflow.q_gaf_transform, kgflow.SQL_GAF_TRANSFORM),
+    ("gaf_germplasm", kgflow.q_gaf_germplasm, kgflow.SQL_GAF_GERMPLASM),
+    ("gaf_qtl", kgflow.q_gaf_qtl, kgflow.SQL_GAF_QTL),
+    ("gaf_orthologs", kgflow.q_gaf_orthologs, kgflow.SQL_GAF_ORTHOLOGS),
+    ("ontology_transform", kgflow.q_ontology_transform,
+     kgflow.SQL_ONTOLOGY_TRANSFORM),
+    ("eol_hierarchy", kgflow.q_eol_hierarchy, kgflow.SQL_EOL_HIERARCHY),
+    ("eol_traits", kgflow.q_eol_traits, kgflow.SQL_EOL_TRAITS),
+    ("gea_transform", kgflow.q_gea_transform, kgflow.SQL_GEA_TRANSFORM),
+    ("graph_two_hop", relational.q_graph_two_hop,
+     relational.SQL_GRAPH_TWO_HOP),
+    ("sparql_select", sparql.q_sparql_select, sparql.SQL_SPARQL_SELECT),
+    ("sparql_filter", sparql.q_sparql_filter, sparql.SQL_SPARQL_FILTER),
+    ("sparql_distinct", sparql.q_sparql_distinct, sparql.SQL_SPARQL_DISTINCT),
+    ("sparql_optional", sparql.q_sparql_optional, sparql.SQL_SPARQL_OPTIONAL),
+    ("sparql_order_limit", sparql.q_sparql_order_limit,
+     sparql.SQL_SPARQL_ORDER_LIMIT),
+    ("sparql_union", sparql.q_sparql_union, sparql.SQL_SPARQL_UNION),
+    ("sparql_values", sparql.q_sparql_values, sparql.SQL_SPARQL_VALUES),
+    ("sparql_path_seq", sparql.q_sparql_path_seq, sparql.SQL_SPARQL_PATH_SEQ),
+    ("sparql_path_plus", sparql.q_sparql_path_plus,
+     sparql.SQL_SPARQL_PATH_PLUS),
+    ("sparql_path_star", sparql.q_sparql_path_star,
+     sparql.SQL_SPARQL_PATH_STAR),
+    ("sparql_path_inverse", sparql.q_sparql_path_inverse,
+     sparql.SQL_SPARQL_PATH_INVERSE),
+    ("sparql_path_alt", sparql.q_sparql_path_alt, sparql.SQL_SPARQL_PATH_ALT),
+    ("sparql_not_exists", sparql.q_sparql_not_exists,
+     sparql.SQL_SPARQL_NOT_EXISTS),
+    ("sparql_agg", sparql.q_sparql_agg, sparql.SQL_SPARQL_AGG),
+    ("pagerank", graph.q_pagerank, graph.SQL_PAGERANK),
+    ("triangle_count", graph.q_triangle_count, graph.SQL_TRIANGLE_COUNT),
+    ("clustering_coeff", relational.q_clustering_coeff,
+     relational.SQL_CLUSTERING_COEFF),
+    ("shortest_path", graph.q_shortest_path, graph.SQL_SHORTEST_PATH),
+    ("tfidf_topk", textops.q_tfidf_topk, textops.SQL_TFIDF_TOPK),
+    ("cooccur_pmi", relational.q_cooccur_pmi, relational.SQL_COOCCUR_PMI),
+    ("curate_corpus", kgflow.q_curate_corpus, kgflow.SQL_CURATE_CORPUS),
+    ("curate_stream", streaming.q_curate_stream,
+     kgflow.SQL_CURATE_CORPUS),  # drained stream == batch chain
+    ("multimodal_meta", relational.q_multimodal_meta,
+     relational.SQL_MULTIMODAL_META),
+    ("multimodal_dims", relational.q_multimodal_dims,
+     relational.SQL_MULTIMODAL_DIMS),
+    ("media_features", media.q_media_features, media.SQL_MEDIA_FEATURES),
+    ("media_resize_plan", relational.q_media_resize_plan,
+     relational.SQL_MEDIA_RESIZE_PLAN),
+    # the PORTABLE md5 corpus: the oracle replays the generator arithmetic
+    # to the exact merged edge set; the component stages keep their own
+    # rows (extract_html, triple_extract, entity_link, ...)
+    ("kg_pipeline", kgflow.q_kg_pipeline, kgflow.SQL_KG_PIPELINE),
+    # round-4 and later additions, oldest first
+    ("paragraph_dedup", dedup.q_paragraph_dedup, dedup.SQL_PARAGRAPH_DEDUP),
+    ("bigram_lm", sampling.q_bigram_lm, sampling.SQL_BIGRAM_LM),
+    ("semantic_dedup", dedup.q_semantic_dedup, dedup.SQL_SEMANTIC_DEDUP),
+    ("url_blocklist", web.q_url_blocklist, web.SQL_URL_BLOCKLIST),
+    ("sparql_bind", sparql.q_sparql_bind, sparql.SQL_SPARQL_BIND),
+    ("sparql_group_concat", sparql.q_sparql_group_concat,
+     sparql.SQL_SPARQL_GROUP_CONCAT),
+    ("sparql_group_expr", sparql.q_sparql_group_expr,
+     sparql.SQL_SPARQL_GROUP_EXPR),
+    ("sparql_order_multi", sparql.q_sparql_order_multi,
+     sparql.SQL_SPARQL_ORDER_MULTI),
+    ("sparql_regex", sparql.q_sparql_regex, sparql.SQL_SPARQL_REGEX),
+    ("kcore", graph.q_kcore, graph.SQL_KCORE),
+    ("ppr", graph.q_ppr, graph.SQL_PPR),
+    ("containment", dedup.q_containment, dedup.SQL_CONTAINMENT),
+    ("hashed_embed", embed.q_hashed_embed, embed.SQL_HASHED_EMBED),
+    ("dup_span_removal", dedup.q_dup_span_removal, dedup.SQL_DUP_SPAN_REMOVAL),
+    ("sparql_optional_filter", sparql.q_sparql_optional_filter,
+     sparql.SQL_SPARQL_OPTIONAL_FILTER),
+    ("curate_v2", kgflow.q_curate_v2, kgflow.SQL_CURATE_V2),
+    ("sparql_exists", sparql.q_sparql_exists, sparql.SQL_SPARQL_EXISTS),
+    ("sparql_minus", sparql.q_sparql_minus, sparql.SQL_SPARQL_MINUS),
+    ("sparql_sum_avg", sparql.q_sparql_sum_avg, sparql.SQL_SPARQL_SUM_AVG),
+    ("sparql_having", sparql.q_sparql_having, sparql.SQL_SPARQL_HAVING),
+    ("sparql_ask", sparql.q_sparql_ask, sparql.SQL_SPARQL_ASK),
+    ("sparql_construct", sparql.q_sparql_construct,
+     sparql.SQL_SPARQL_CONSTRUCT),
+    ("hits", graph.q_hits, graph.SQL_HITS),
+    ("label_prop", graph.q_label_prop, graph.SQL_LABEL_PROP),
+    ("fuzzy_dedup", dedup.q_fuzzy_dedup, dedup.SQL_FUZZY_DEDUP),
+    ("quality_logit", textops.q_quality_logit, textops.SQL_QUALITY_LOGIT),
+    ("stratified_sample", sampling.q_stratified_sample,
+     sampling.SQL_STRATIFIED_SAMPLE),
+    ("dedup_stream", streaming.q_dedup_stream, streaming.SQL_DEDUP_STREAM),
+    ("hll_distinct", sketch.q_hll_distinct, sketch.SQL_HLL_DISTINCT),
+    ("c4_rules", textops.q_c4_rules, textops.SQL_C4_RULES),
+    ("incremental_dedup", dedup.q_incremental_dedup,
+     dedup.SQL_INCREMENTAL_DEDUP),
+    ("count_min", sketch.q_count_min, sketch.SQL_COUNT_MIN),
+    ("sparql_offset", sparql.q_sparql_offset, sparql.SQL_SPARQL_OFFSET),
+    ("vocab_topk", sampling.q_vocab_topk, sampling.SQL_VOCAB_TOPK),
+    ("audio_chunks", media.q_audio_chunks, media.SQL_AUDIO_CHUNKS),
+    ("sparql_count_star", sparql.q_sparql_count_star,
+     sparql.SQL_SPARQL_COUNT_STAR),
+    ("sparql_filter_cmp", sparql.q_sparql_filter_cmp,
+     sparql.SQL_SPARQL_FILTER_CMP),
+    ("bloom_probe", sketch.q_bloom_probe, sketch.SQL_BLOOM_PROBE),
+    ("kgx_validate", kgqc.q_kgx_validate, kgqc.SQL_KGX_VALIDATE),
+    ("pack_sequences", sampling.q_pack_sequences, sampling.SQL_PACK_SEQUENCES),
+    ("bpe_pairs", sampling.q_bpe_pairs, sampling.SQL_BPE_PAIRS),
+    ("fixed_sample", sampling.q_fixed_sample, sampling.SQL_FIXED_SAMPLE),
+    ("curate_v3", kgflow.q_curate_v3, kgflow.SQL_CURATE_V3),
+    ("group_centroids", embed.q_group_centroids, embed.SQL_GROUP_CENTROIDS),
+    ("fuzzy_string_join", dedup.q_fuzzy_string_join,
+     dedup.SQL_FUZZY_STRING_JOIN),
+    ("kg_diff", kgqc.q_kg_diff, kgqc.SQL_KG_DIFF),
+    ("stupid_backoff", sampling.q_stupid_backoff, sampling.SQL_STUPID_BACKOFF),
+    ("hll_stream", streaming.q_hll_stream,
+     sketch.SQL_HLL_DISTINCT),  # drained stream == batch sketch
+    ("sparql_neg_path", sparql.q_sparql_neg_path, sparql.SQL_SPARQL_NEG_PATH),
+    ("predicate_profile", kgqc.q_predicate_profile,
+     kgqc.SQL_PREDICATE_PROFILE),
+    ("inverse_detect", kgqc.q_inverse_detect, kgqc.SQL_INVERSE_DETECT),
+    ("adamic_adar", graph.q_adamic_adar, graph.SQL_ADAMIC_ADAR),
+    ("word_entropy", textops.q_word_entropy, textops.SQL_WORD_ENTROPY),
+    ("sparql_subquery", sparql.q_sparql_subquery, sparql.SQL_SPARQL_SUBQUERY),
+    ("rolling_zscore", temporal.q_rolling_zscore, temporal.SQL_ROLLING_ZSCORE),
+    ("hash_walks", graph.q_hash_walks, graph.SQL_HASH_WALKS),
+    ("sparql_values_multi", sparql.q_sparql_values_multi,
+     sparql.SQL_SPARQL_VALUES_MULTI),
+    ("sparql_sample", sparql.q_sparql_sample, sparql.SQL_SPARQL_SAMPLE),
+    ("host_graph", web.q_host_graph, web.SQL_HOST_GRAPH),
+    ("degree_histogram", graph.q_degree_histogram, graph.SQL_DEGREE_HISTOGRAM),
+    ("temperature_mix", sampling.q_temperature_mix,
+     sampling.SQL_TEMPERATURE_MIX),
+    ("dsir_weights", sampling.q_dsir_weights, sampling.SQL_DSIR_WEIGHTS),
+    ("scd2_history", temporal.q_scd2_history, temporal.SQL_SCD2_HISTORY),
+    ("anchor_topk", web.q_anchor_topk, web.SQL_ANCHOR_TOPK),
+    ("interval_merge", temporal.q_interval_merge, temporal.SQL_INTERVAL_MERGE),
+    ("tc_reachability", graph.q_tc_reachability, graph.SQL_TC_REACHABILITY),
+    ("rdfs_closure", graph.q_rdfs_closure, graph.SQL_RDFS_CLOSURE),
+    ("redirect_resolve", web.q_redirect_resolve, web.SQL_REDIRECT_RESOLVE),
+    ("hyperball", graph.q_hyperball, graph.SQL_HYPERBALL),
+    ("flesch_score", textops.q_flesch_score, textops.SQL_FLESCH_SCORE),
+    ("chunk_sliding", sampling.q_chunk_sliding, sampling.SQL_CHUNK_SLIDING),
+    ("hierarchy_cycles", graph.q_hierarchy_cycles, graph.SQL_HIERARCHY_CYCLES),
+    ("canonical_meta", web.q_canonical_meta, web.SQL_CANONICAL_META),
+    ("kg_negatives", kgqc.q_kg_negatives, kgqc.SQL_KG_NEGATIVES),
+    ("kmeans", embed.q_kmeans, embed.SQL_KMEANS),
+    ("semdedup_kmeans", dedup.q_semdedup_kmeans, dedup.SQL_SEMDEDUP_KMEANS),
+    ("sparql_strfuncs", sparql.q_sparql_strfuncs, sparql.SQL_SPARQL_STRFUNCS),
+    ("sparql_in", sparql.q_sparql_in, sparql.SQL_SPARQL_IN),
+    ("distance_distribution", graph.q_distance_distribution,
+     graph.SQL_DISTANCE_DISTRIBUTION),
+    ("join_stream", streaming.q_join_stream, streaming.SQL_JOIN_STREAM),
+    ("robots_rules", web.q_robots_rules, web.SQL_ROBOTS_RULES),
+    ("robots_check", web.q_robots_check, web.SQL_ROBOTS_CHECK),
+    ("frame_sample", media.q_frame_sample, media.SQL_FRAME_SAMPLE),
+    ("web_canonical_dedup", web.q_web_canonical_dedup,
+     web.SQL_WEB_CANONICAL_DEDUP),
+    ("rollup_cube", temporal.q_rollup_cube, temporal.SQL_ROLLUP_CUBE),
+    ("pivot_events", temporal.q_pivot_events, temporal.SQL_PIVOT_EVENTS),
+    ("sparql_describe", sparql.q_sparql_describe, sparql.SQL_SPARQL_DESCRIBE),
+    ("harmonic_centrality", graph.q_harmonic_centrality,
+     graph.SQL_HARMONIC_CENTRALITY),
+    ("group_sample", sampling.q_group_sample, sampling.SQL_GROUP_SAMPLE),
+    ("winnow_fp", dedup.q_winnow_fp, dedup.SQL_WINNOW_FP),
+    ("surt_keys", web.q_surt_keys, web.SQL_SURT_KEYS),
+    ("ts_multi", temporal.q_ts_multi, temporal.SQL_TS_MULTI),
+    ("mad_outliers", temporal.q_mad_outliers, temporal.SQL_MAD_OUTLIERS),
+    ("crawl_frontier", web.q_crawl_frontier, web.SQL_CRAWL_FRONTIER),
+    ("jsonl_corrupt", textops.q_jsonl_corrupt, textops.SQL_JSONL_CORRUPT),
+    ("nfc_normalize", textops.q_nfc_normalize, textops.SQL_NFC_NORMALIZE),
+    ("sparql_bind_if", sparql.q_sparql_bind_if, sparql.SQL_SPARQL_BIND_IF),
+    ("host_boilerplate", web.q_host_boilerplate, web.SQL_HOST_BOILERPLATE),
+    ("sitemap_urls", web.q_sitemap_urls, web.SQL_SITEMAP_URLS),
+    ("strip_boilerplate", web.q_strip_boilerplate, web.SQL_STRIP_BOILERPLATE),
+    ("recrawl_priority", web.q_recrawl_priority, web.SQL_RECRAWL_PRIORITY),
+    ("assortativity", graph.q_assortativity, graph.SQL_ASSORTATIVITY),
+    ("funnel", temporal.q_funnel, temporal.SQL_FUNNEL),
+    ("event_transitions", temporal.q_event_transitions,
+     temporal.SQL_EVENT_TRANSITIONS),
+    ("crawl_lifecycle", web.q_crawl_lifecycle, web.SQL_CRAWL_LIFECYCLE),
+    ("int8_quantize", embed.q_int8_quantize, embed.SQL_INT8_QUANTIZE),
+    ("kg_negatives_head", kgqc.q_kg_negatives_head,
+     kgqc.SQL_KG_NEGATIVES_HEAD),
+    ("int8_topk", embed.q_int8_topk, embed.SQL_INT8_TOPK),
+    ("cluster_topics", embed.q_cluster_topics, embed.SQL_CLUSTER_TOPICS),
+    ("retention", temporal.q_retention, temporal.SQL_RETENTION),
+    ("sparql_values_undef", sparql.q_sparql_values_undef,
+     sparql.SQL_SPARQL_VALUES_UNDEF),
+    ("robots_delay", web.q_robots_delay, web.SQL_ROBOTS_DELAY),
+]
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "pricing_summary": q_pricing_summary,
-    "count_by_category": q_count_by_category,
-    "filter_project": q_filter_project,
-    "semi_join": q_semi_join,
-    "anti_join": q_anti_join,
-    "broadcast_join_agg": q_broadcast_join_agg,
-    "multi_join": q_multi_join,
-    "explode_tokens": q_explode_tokens,
-    "first_wins": q_first_wins,
-    "union_merge": q_union_merge,
-    "window_topk": q_window_topk,
-    "topk_limit": q_topk_limit,
-    "case_chain": q_case_chain,
-    "string_funcs": q_string_funcs,
-    "curie_ops": q_curie_ops,
-    "priority_coalesce": q_priority_coalesce,
-    "rollup_stats": q_rollup_stats,
-    "sparql_sink_error": q_sparql_sink_error,
-    "json_extract": q_json_extract,
-    "count_by_spo": q_count_by_spo,
-    "events_window": q_events_window,
-    "events_window_streaming": q_events_window_streaming,
-    "sessionize": q_sessionize,
-    "asof_join": q_asof_join,
-    "range_join_agg": q_range_join_agg,
-    "sessionize_streaming": q_sessionize_streaming,
-    "token_count": q_token_count,
-    "quality_buckets": q_quality_buckets,
-    "lang_id": q_lang_id,
-    "repetition_ratio": q_repetition_ratio,
-    "dup_ngram_ratio": q_dup_ngram_ratio,
-    "bpe_token_count": q_bpe_token_count,
-    "gopher_rules": q_gopher_rules,
-    "fingerprint": q_fingerprint,
-    "exact_dedup": q_exact_dedup,
-    "ngram_jaccard": q_ngram_jaccard,
-    "dup_spans": q_dup_spans,
-    "decontam": q_decontam,
-    "length_quartiles": q_length_quartiles,
-    "line_dedup": q_line_dedup,
-    "url_parse": q_url_parse,
-    "url_dedup": q_url_dedup,
-    "domain_stats": q_domain_stats,
-    "pii_redact": q_pii_redact,
-    "hash_sample": q_hash_sample,
-    "domain_quota": q_domain_quota,
-    "minhash_neardup": q_minhash_neardup,
-    "minhash_banded": q_minhash_banded,
-    "simhash_neardup": q_simhash_neardup,
-    "cosine_topk": q_cosine_topk,
-    "embedding_neardup": q_embedding_neardup,
-    "ann_lsh_topk": q_ann_lsh_topk,
-    "ann_ivf_topk": q_ann_ivf_topk,
-    "extract_html": q_extract_html,
-    "triple_extract": q_triple_extract,
-    "entity_link": q_entity_link,
-    "link_ambiguity": q_link_ambiguity,
-    "termlist_explode": q_termlist_explode,
-    "connected_components": q_connected_components,
-    "kgx_merge": q_kgx_merge,
-    "kg_materialize": q_kg_materialize,
-    "gaf_transform": q_gaf_transform,
-    "gaf_germplasm": q_gaf_germplasm,
-    "gaf_qtl": q_gaf_qtl,
-    "gaf_orthologs": q_gaf_orthologs,
-    "ontology_transform": q_ontology_transform,
-    "eol_hierarchy": q_eol_hierarchy,
-    "eol_traits": q_eol_traits,
-    "gea_transform": q_gea_transform,
-    "graph_two_hop": q_graph_two_hop,
-    "sparql_select": q_sparql_select,
-    "sparql_filter": q_sparql_filter,
-    "sparql_distinct": q_sparql_distinct,
-    "sparql_optional": q_sparql_optional,
-    "sparql_order_limit": q_sparql_order_limit,
-    "sparql_union": q_sparql_union,
-    "sparql_values": q_sparql_values,
-    "sparql_path_seq": q_sparql_path_seq,
-    "sparql_path_plus": q_sparql_path_plus,
-    "sparql_path_star": q_sparql_path_star,
-    "sparql_path_inverse": q_sparql_path_inverse,
-    "sparql_path_alt": q_sparql_path_alt,
-    "sparql_not_exists": q_sparql_not_exists,
-    "sparql_agg": q_sparql_agg,
-    "pagerank": q_pagerank,
-    "triangle_count": q_triangle_count,
-    "clustering_coeff": q_clustering_coeff,
-    "shortest_path": q_shortest_path,
-    "tfidf_topk": q_tfidf_topk,
-    "cooccur_pmi": q_cooccur_pmi,
-    "curate_corpus": q_curate_corpus,
-    "curate_stream": q_curate_stream,
-    "multimodal_meta": q_multimodal_meta,
-    "multimodal_dims": q_multimodal_dims,
-    "media_features": q_media_features,
-    "media_resize_plan": q_media_resize_plan,
-    "kg_pipeline": q_kg_pipeline,
-    # round-4 additions (outside the 50-row certification window this
-    # round; round 5 should rotate ALL never-certified rows — everything
-    # from here down plus the batch-3+ session rows at the tail — into
-    # positions 1-50, back-filled with the stalest r02-certified rows)
-    "paragraph_dedup": q_paragraph_dedup,
-    "bigram_lm": q_bigram_lm,
-    "semantic_dedup": q_semantic_dedup,
-    "url_blocklist": q_url_blocklist,
-    "sparql_bind": q_sparql_bind,
-    "sparql_group_concat": q_sparql_group_concat,
-    "sparql_group_expr": q_sparql_group_expr,
-    "sparql_order_multi": q_sparql_order_multi,
-    "sparql_regex": q_sparql_regex,
-    "kcore": q_kcore,
-    "ppr": q_ppr,
-    "containment": q_containment,
-    "hashed_embed": q_hashed_embed,
-    "dup_span_removal": q_dup_span_removal,
-    "sparql_optional_filter": q_sparql_optional_filter,
-    "curate_v2": q_curate_v2,
-    "sparql_exists": q_sparql_exists,
-    "sparql_minus": q_sparql_minus,
-    "sparql_sum_avg": q_sparql_sum_avg,
-    "sparql_having": q_sparql_having,
-    "sparql_ask": q_sparql_ask,
-    "sparql_construct": q_sparql_construct,
-    "hits": q_hits,
-    "label_prop": q_label_prop,
-    "fuzzy_dedup": q_fuzzy_dedup,
-    "quality_logit": q_quality_logit,
-    "stratified_sample": q_stratified_sample,
-    "dedup_stream": q_dedup_stream,
-    "hll_distinct": q_hll_distinct,
-    "c4_rules": q_c4_rules,
-    "incremental_dedup": q_incremental_dedup,
-    "count_min": q_count_min,
-    "sparql_offset": q_sparql_offset,
-    "vocab_topk": q_vocab_topk,
-    "audio_chunks": q_audio_chunks,
-    "sparql_count_star": q_sparql_count_star,
-    "sparql_filter_cmp": q_sparql_filter_cmp,
-    "bloom_probe": q_bloom_probe,
-    "kgx_validate": q_kgx_validate,
-    "pack_sequences": q_pack_sequences,
-    "bpe_pairs": q_bpe_pairs,
-    "fixed_sample": q_fixed_sample,
-    "curate_v3": q_curate_v3,
-    "group_centroids": q_group_centroids,
-    "fuzzy_string_join": q_fuzzy_string_join,
-    "kg_diff": q_kg_diff,
-    "stupid_backoff": q_stupid_backoff,
-    "hll_stream": q_hll_stream,
-    "sparql_neg_path": q_sparql_neg_path,
-    "predicate_profile": q_predicate_profile,
-    "inverse_detect": q_inverse_detect,
-    "adamic_adar": q_adamic_adar,
-    "word_entropy": q_word_entropy,
-    "sparql_subquery": q_sparql_subquery,
-    "rolling_zscore": q_rolling_zscore,
-    "hash_walks": q_hash_walks,
-    "sparql_values_multi": q_sparql_values_multi,
-    "sparql_sample": q_sparql_sample,
-    "host_graph": q_host_graph,
-    "degree_histogram": q_degree_histogram,
-    "temperature_mix": q_temperature_mix,
-    "dsir_weights": q_dsir_weights,
-    "scd2_history": q_scd2_history,
-    "anchor_topk": q_anchor_topk,
-    "interval_merge": q_interval_merge,
-    "tc_reachability": q_tc_reachability,
-    "rdfs_closure": q_rdfs_closure,
-    "redirect_resolve": q_redirect_resolve,
-    "hyperball": q_hyperball,
-    "flesch_score": q_flesch_score,
-    "chunk_sliding": q_chunk_sliding,
-    "hierarchy_cycles": q_hierarchy_cycles,
-    "canonical_meta": q_canonical_meta,
-    "kg_negatives": q_kg_negatives,
-    "kmeans": q_kmeans,
-    "semdedup_kmeans": q_semdedup_kmeans,
-    "sparql_strfuncs": q_sparql_strfuncs,
-    "sparql_in": q_sparql_in,
-    "distance_distribution": q_distance_distribution,
-    "join_stream": q_join_stream,
-    "robots_rules": q_robots_rules,
-    "robots_check": q_robots_check,
-    "frame_sample": q_frame_sample,
-    "web_canonical_dedup": q_web_canonical_dedup,
-    "rollup_cube": q_rollup_cube,
-    "pivot_events": q_pivot_events,
-    "sparql_describe": q_sparql_describe,
-    "harmonic_centrality": q_harmonic_centrality,
-    "group_sample": q_group_sample,
-    "winnow_fp": q_winnow_fp,
-    "surt_keys": q_surt_keys,
-    "ts_multi": q_ts_multi,
-    "mad_outliers": q_mad_outliers,
-    "crawl_frontier": q_crawl_frontier,
-    "jsonl_corrupt": q_jsonl_corrupt,
-    "nfc_normalize": q_nfc_normalize,
-    "sparql_bind_if": q_sparql_bind_if,
-    "host_boilerplate": q_host_boilerplate,
-    "sitemap_urls": q_sitemap_urls,
-    "strip_boilerplate": q_strip_boilerplate,
-    "recrawl_priority": q_recrawl_priority,
-    "assortativity": q_assortativity,
-    "funnel": q_funnel,
-    "event_transitions": q_event_transitions,
-    "crawl_lifecycle": q_crawl_lifecycle,
-    "int8_quantize": q_int8_quantize,
-    "kg_negatives_head": q_kg_negatives_head,
-    "int8_topk": q_int8_topk,
-    "cluster_topics": q_cluster_topics,
-    "retention": q_retention,
-    "sparql_values_undef": q_sparql_values_undef,
-    "robots_delay": q_robots_delay,
-}
-
-ORACLES: dict[str, str] = {
-    "pricing_summary": SQL_PRICING,
-    "count_by_category": SQL_COUNT_BY_CATEGORY,
-    "filter_project": SQL_FILTER_PROJECT,
-    "semi_join": SQL_SEMI_JOIN,
-    "anti_join": SQL_ANTI_JOIN,
-    "broadcast_join_agg": SQL_BROADCAST_JOIN_AGG,
-    "multi_join": SQL_MULTI_JOIN,
-    "explode_tokens": SQL_EXPLODE_TOKENS,
-    "first_wins": SQL_FIRST_WINS,
-    "union_merge": SQL_UNION_MERGE,
-    "window_topk": SQL_WINDOW_TOPK,
-    "topk_limit": SQL_TOPK_LIMIT,
-    "case_chain": SQL_CASE_CHAIN,
-    "string_funcs": SQL_STRING_FUNCS,
-    "curie_ops": SQL_CURIE_OPS,
-    "priority_coalesce": SQL_PRIORITY_COALESCE,
-    "rollup_stats": SQL_ROLLUP_STATS,
-    "sparql_sink_error": SQL_SPARQL_SINK_ERROR,
-    "json_extract": SQL_JSON_EXTRACT,
-    "count_by_spo": SQL_COUNT_BY_SPO,
-    "events_window": SQL_EVENTS_WINDOW,
-    "events_window_streaming": SQL_EVENTS_WINDOW,  # stream == batch agg
-    "sessionize": SQL_SESSIONIZE,
-    "asof_join": SQL_ASOF_JOIN,
-    "range_join_agg": SQL_RANGE_JOIN_AGG,
-    "sessionize_streaming": SQL_SESSIONIZE,  # drained stream == batch lag
-    "token_count": SQL_TOKEN_COUNT,
-    "quality_buckets": SQL_QUALITY_BUCKETS,
-    "lang_id": SQL_LANG_ID,
-    "repetition_ratio": SQL_REPETITION_RATIO,
-    "dup_ngram_ratio": SQL_DUP_NGRAM_RATIO,
-    "bpe_token_count": SQL_BPE_TOKEN_COUNT,
-    "gopher_rules": SQL_GOPHER_RULES,
-    "fingerprint": SQL_FINGERPRINT,
-    "exact_dedup": SQL_EXACT_DEDUP,
-    "ngram_jaccard": SQL_NGRAM_JACCARD,
-    "dup_spans": SQL_DUP_SPANS,
-    "decontam": SQL_DECONTAM,
-    "length_quartiles": SQL_LENGTH_QUARTILES,
-    "line_dedup": SQL_LINE_DEDUP,
-    "url_parse": SQL_URL_PARSE,
-    "url_dedup": SQL_URL_DEDUP,
-    "domain_stats": SQL_DOMAIN_STATS,
-    "pii_redact": SQL_PII_REDACT,
-    "hash_sample": SQL_HASH_SAMPLE,
-    "domain_quota": SQL_DOMAIN_QUOTA,
-    "minhash_neardup": SQL_MINHASH_NEARDUP,
-    "minhash_banded": SQL_MINHASH_BANDED,
-    "simhash_neardup": SQL_SIMHASH_NEARDUP,
-    "cosine_topk": SQL_COSINE_TOPK,
-    "ann_ivf_topk": SQL_COSINE_TOPK,  # exhaustive IVF == exact top-k
-    "ann_lsh_topk": SQL_COSINE_TOPK,  # exhaustive LSH == exact top-k
-    "embedding_neardup": SQL_EMBEDDING_NEARDUP,
-    "extract_html": SQL_EXTRACT_HTML,
-    "triple_extract": SQL_TRIPLE_EXTRACT,
-    "entity_link": SQL_ENTITY_LINK,
-    "link_ambiguity": SQL_LINK_AMBIGUITY,
-    "termlist_explode": SQL_TERMLIST_EXPLODE,
-    "connected_components": SQL_CONNECTED_COMPONENTS,
-    "kgx_merge": SQL_KGX_MERGE,
-    "kg_materialize": SQL_KG_MATERIALIZE,
-    "gaf_transform": SQL_GAF_TRANSFORM,
-    "gaf_germplasm": SQL_GAF_GERMPLASM,
-    "gaf_qtl": SQL_GAF_QTL,
-    "gaf_orthologs": SQL_GAF_ORTHOLOGS,
-    "ontology_transform": SQL_ONTOLOGY_TRANSFORM,
-    "eol_hierarchy": SQL_EOL_HIERARCHY,
-    "eol_traits": SQL_EOL_TRAITS,
-    "gea_transform": SQL_GEA_TRANSFORM,
-    "graph_two_hop": SQL_GRAPH_TWO_HOP,
-    "sparql_select": SQL_SPARQL_SELECT,
-    "sparql_filter": SQL_SPARQL_FILTER,
-    "sparql_distinct": SQL_SPARQL_DISTINCT,
-    "sparql_optional": SQL_SPARQL_OPTIONAL,
-    "sparql_order_limit": SQL_SPARQL_ORDER_LIMIT,
-    "sparql_union": SQL_SPARQL_UNION,
-    "sparql_values": SQL_SPARQL_VALUES,
-    "sparql_path_seq": SQL_SPARQL_PATH_SEQ,
-    "sparql_path_plus": SQL_SPARQL_PATH_PLUS,
-    "sparql_path_star": SQL_SPARQL_PATH_STAR,
-    "sparql_path_inverse": SQL_SPARQL_PATH_INVERSE,
-    "sparql_path_alt": SQL_SPARQL_PATH_ALT,
-    "sparql_not_exists": SQL_SPARQL_NOT_EXISTS,
-    "sparql_agg": SQL_SPARQL_AGG,
-    "pagerank": SQL_PAGERANK,
-    "triangle_count": SQL_TRIANGLE_COUNT,
-    "clustering_coeff": SQL_CLUSTERING_COEFF,
-    "shortest_path": SQL_SHORTEST_PATH,
-    "tfidf_topk": SQL_TFIDF_TOPK,
-    "cooccur_pmi": SQL_COOCCUR_PMI,
-    "curate_corpus": SQL_CURATE_CORPUS,
-    "curate_stream": SQL_CURATE_CORPUS,  # drained stream == batch chain
-    "multimodal_meta": SQL_MULTIMODAL_META,
-    "multimodal_dims": SQL_MULTIMODAL_DIMS,
-    "media_features": SQL_MEDIA_FEATURES,
-    "media_resize_plan": SQL_MEDIA_RESIZE_PLAN,
-    # kg_pipeline runs on the PORTABLE corpus (md5/60-bit draws); its
-    # oracle replays the generator arithmetic to the exact merged edge
-    # set — component stages also keep their own oracle rows
-    # (extract_html, triple_extract, entity_link, connected_components,
-    # kg_materialize)
-    "kg_pipeline": SQL_KG_PIPELINE,
-    "paragraph_dedup": SQL_PARAGRAPH_DEDUP,
-    "bigram_lm": SQL_BIGRAM_LM,
-    "semantic_dedup": SQL_SEMANTIC_DEDUP,
-    "url_blocklist": SQL_URL_BLOCKLIST,
-    "sparql_bind": SQL_SPARQL_BIND,
-    "sparql_group_concat": SQL_SPARQL_GROUP_CONCAT,
-    "sparql_group_expr": SQL_SPARQL_GROUP_EXPR,
-    "sparql_order_multi": SQL_SPARQL_ORDER_MULTI,
-    "sparql_regex": SQL_SPARQL_REGEX,
-    "kcore": SQL_KCORE,
-    "ppr": SQL_PPR,
-    "containment": SQL_CONTAINMENT,
-    "hashed_embed": SQL_HASHED_EMBED,
-    "dup_span_removal": SQL_DUP_SPAN_REMOVAL,
-    "sparql_optional_filter": SQL_SPARQL_OPTIONAL_FILTER,
-    "curate_v2": SQL_CURATE_V2,
-    "sparql_exists": SQL_SPARQL_EXISTS,
-    "sparql_minus": SQL_SPARQL_MINUS,
-    "sparql_sum_avg": SQL_SPARQL_SUM_AVG,
-    "sparql_having": SQL_SPARQL_HAVING,
-    "sparql_ask": SQL_SPARQL_ASK,
-    "sparql_construct": SQL_SPARQL_CONSTRUCT,
-    "hits": SQL_HITS,
-    "label_prop": SQL_LABEL_PROP,
-    "fuzzy_dedup": SQL_FUZZY_DEDUP,
-    "quality_logit": SQL_QUALITY_LOGIT,
-    "stratified_sample": SQL_STRATIFIED_SAMPLE,
-    "dedup_stream": SQL_DEDUP_STREAM,
-    "hll_distinct": SQL_HLL_DISTINCT,
-    "c4_rules": SQL_C4_RULES,
-    "incremental_dedup": SQL_INCREMENTAL_DEDUP,
-    "count_min": SQL_COUNT_MIN,
-    "sparql_offset": SQL_SPARQL_OFFSET,
-    "vocab_topk": SQL_VOCAB_TOPK,
-    "audio_chunks": SQL_AUDIO_CHUNKS,
-    "sparql_count_star": SQL_SPARQL_COUNT_STAR,
-    "sparql_filter_cmp": SQL_SPARQL_FILTER_CMP,
-    "bloom_probe": SQL_BLOOM_PROBE,
-    "kgx_validate": SQL_KGX_VALIDATE,
-    "pack_sequences": SQL_PACK_SEQUENCES,
-    "bpe_pairs": SQL_BPE_PAIRS,
-    "fixed_sample": SQL_FIXED_SAMPLE,
-    "curate_v3": SQL_CURATE_V3,
-    "group_centroids": SQL_GROUP_CENTROIDS,
-    "fuzzy_string_join": SQL_FUZZY_STRING_JOIN,
-    "kg_diff": SQL_KG_DIFF,
-    "stupid_backoff": SQL_STUPID_BACKOFF,
-    "hll_stream": SQL_HLL_DISTINCT,
-    "sparql_neg_path": SQL_SPARQL_NEG_PATH,
-    "predicate_profile": SQL_PREDICATE_PROFILE,
-    "inverse_detect": SQL_INVERSE_DETECT,
-    "adamic_adar": SQL_ADAMIC_ADAR,
-    "word_entropy": SQL_WORD_ENTROPY,
-    "sparql_subquery": SQL_SPARQL_SUBQUERY,
-    "rolling_zscore": SQL_ROLLING_ZSCORE,
-    "hash_walks": SQL_HASH_WALKS,
-    "sparql_values_multi": SQL_SPARQL_VALUES_MULTI,
-    "sparql_sample": SQL_SPARQL_SAMPLE,
-    "host_graph": SQL_HOST_GRAPH,
-    "degree_histogram": SQL_DEGREE_HISTOGRAM,
-    "temperature_mix": SQL_TEMPERATURE_MIX,
-    "dsir_weights": SQL_DSIR_WEIGHTS,
-    "scd2_history": SQL_SCD2_HISTORY,
-    "anchor_topk": SQL_ANCHOR_TOPK,
-    "interval_merge": SQL_INTERVAL_MERGE,
-    "tc_reachability": SQL_TC_REACHABILITY,
-    "rdfs_closure": SQL_RDFS_CLOSURE,
-    "redirect_resolve": SQL_REDIRECT_RESOLVE,
-    "hyperball": SQL_HYPERBALL,
-    "flesch_score": SQL_FLESCH_SCORE,
-    "chunk_sliding": SQL_CHUNK_SLIDING,
-    "hierarchy_cycles": SQL_HIERARCHY_CYCLES,
-    "canonical_meta": SQL_CANONICAL_META,
-    "kg_negatives": SQL_KG_NEGATIVES,
-    "kmeans": SQL_KMEANS,
-    "semdedup_kmeans": SQL_SEMDEDUP_KMEANS,
-    "sparql_strfuncs": SQL_SPARQL_STRFUNCS,
-    "sparql_in": SQL_SPARQL_IN,
-    "distance_distribution": SQL_DISTANCE_DISTRIBUTION,
-    "join_stream": SQL_JOIN_STREAM,
-    "robots_rules": SQL_ROBOTS_RULES,
-    "robots_check": SQL_ROBOTS_CHECK,
-    "frame_sample": SQL_FRAME_SAMPLE,
-    "web_canonical_dedup": SQL_WEB_CANONICAL_DEDUP,
-    "rollup_cube": SQL_ROLLUP_CUBE,
-    "pivot_events": SQL_PIVOT_EVENTS,
-    "sparql_describe": SQL_SPARQL_DESCRIBE,
-    "harmonic_centrality": SQL_HARMONIC_CENTRALITY,
-    "group_sample": SQL_GROUP_SAMPLE,
-    "winnow_fp": SQL_WINNOW_FP,
-    "surt_keys": SQL_SURT_KEYS,
-    "ts_multi": SQL_TS_MULTI,
-    "mad_outliers": SQL_MAD_OUTLIERS,
-    "crawl_frontier": SQL_CRAWL_FRONTIER,
-    "jsonl_corrupt": SQL_JSONL_CORRUPT,
-    "nfc_normalize": SQL_NFC_NORMALIZE,
-    "sparql_bind_if": SQL_SPARQL_BIND_IF,
-    "host_boilerplate": SQL_HOST_BOILERPLATE,
-    "sitemap_urls": SQL_SITEMAP_URLS,
-    "strip_boilerplate": SQL_STRIP_BOILERPLATE,
-    "recrawl_priority": SQL_RECRAWL_PRIORITY,
-    "assortativity": SQL_ASSORTATIVITY,
-    "funnel": SQL_FUNNEL,
-    "event_transitions": SQL_EVENT_TRANSITIONS,
-    "crawl_lifecycle": SQL_CRAWL_LIFECYCLE,
-    "int8_quantize": SQL_INT8_QUANTIZE,
-    "kg_negatives_head": SQL_KG_NEGATIVES_HEAD,
-    "int8_topk": SQL_INT8_TOPK,
-    "cluster_topics": SQL_CLUSTER_TOPICS,
-    "retention": SQL_RETENTION,
-    "sparql_values_undef": SQL_SPARQL_VALUES_UNDEF,
-    "robots_delay": SQL_ROBOTS_DELAY,
-}
+    name: query for name, query, _ in _ROWS}
+ORACLES: dict[str, str] = {name: oracle for name, _, oracle in _ROWS}
+# a dict keeps only the last of two equal keys: a repeated name would
+# silently shadow the earlier row
+assert len(QUERIES) == len(_ROWS), sorted(
+    n for n in QUERIES if [r[0] for r in _ROWS].count(n) > 1)
 
 
-# ---------------------------------------------------------------------------
-# Driver-certification window ordering (round 5)
-# ---------------------------------------------------------------------------
-# The driver's correctness gate runs the FIRST 50 registry entries only, so
-# registry order decides which rows get hard (driver-recorded) certification
-# each round. After r04, 111 of 207 rows had local-oracle green but no
-# driver record; this window executes the documented rotation
-# (scripts/plan_rotation.py output, never-certified rows oldest-first):
-#   1      kg_pipeline — the flagship row, newly oracle-backed this round
-#          (the portable md5-corpus oracle replaces the r1-r4 no_oracle
-#          rows-only check), so its FIRST driver record is a full
-#          rows+schema+hash certification
-#   2-50   the oldest never-driver-certified rows in registry order:
-#          the post-r4-freeze block (paragraph_dedup .. dup_span_removal),
-#          the batch-12/15/16 rows, and the continuation-session head
-#          (sparql_* solution-modifier suite, graph analytics, sketches,
-#          samplers, packing, LM scoring)
-# After this round the never-certified backlog is 113 -> 63 (111 from r4
-# plus the two new SPARQL rows, which sit inside this window); the ROUND-6
-# window is the next 50 of `python scripts/plan_rotation.py 50` (vocab/
-# media/stream tail first), which takes the backlog to 13 — fully paid
-# by round 7 with slots to spare for re-certifying stale rows.
-# The dict-literal definitions above stay in thematic reading order; only
-# the iteration order is rebuilt here.
+# Driver-certification window. The driver's correctness gate runs the
+# FIRST 50 registry entries only, so registry order decides which rows get
+# a driver-recorded certification each round. This is the round-5 window
+# (scripts/plan_rotation.py output): kg_pipeline, the flagship row, then the
+# oldest never-driver-certified rows in table order. The next window is the
+# first 50 of `python scripts/plan_rotation.py 50`. _ROWS keeps its
+# declaration order; only the iteration order is rebuilt here.
 _CERT_WINDOW = [
     "kg_pipeline",
     "paragraph_dedup", "bigram_lm", "semantic_dedup", "url_blocklist",

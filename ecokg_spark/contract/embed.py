@@ -19,11 +19,13 @@ def q_group_centroids(spark, sf):
     """Per-label embedding centroids (operators/embed.py
     group_centroids): decimal-staged per-dimension sums make the mean
     exact on any engine and any accumulation order — the k-means-update
-    / class-mean primitive over the embeddings table."""
+    / class-mean primitive over the embeddings table. Emitted as scalar
+    (label, n_vectors, dim, value) rows, one per centroid component."""
     from ecokg_spark.operators.embed import group_centroids
 
     e = t(spark, sf, "embeddings")
-    return group_centroids(e, "embedding", "label")
+    return group_centroids(e, "embedding", "label").select(
+        "label", "n_vectors", F.posexplode("centroid").alias("dim", "value"))
 
 
 SQL_GROUP_CENTROIDS = """
@@ -42,10 +44,9 @@ per_dim AS (
          COUNT(*) AS n
   FROM dims GROUP BY label, dim
 )
-SELECT label, CAST(MAX(n) AS BIGINT) AS n_vectors,
-       list_transform(list_sort(list(struct_pack(d := dim, m := m))),
-                      x -> x.m) AS centroid
-FROM per_dim GROUP BY label
+SELECT label, CAST(MAX(n) OVER (PARTITION BY label) AS BIGINT) AS n_vectors,
+       CAST(dim AS INT) AS dim, m AS value
+FROM per_dim
 """
 
 
@@ -142,18 +143,24 @@ FROM documents d LEFT JOIN nv USING (doc_id)
 """
 
 
-SQL_HASHED_EMBED = _hashed_embed_sql(16)
+SQL_HASHED_EMBED = f"""
+SELECT doc_id, CAST(generate_subscripts(embedding, 1) - 1 AS INT) AS dim,
+       unnest(embedding) AS value
+FROM ({_hashed_embed_sql(16)})
+"""
 
 
 def q_hashed_embed(spark, sf):
     """Model-free hashed bag-of-words embeddings (operators/embed.py) in
     the PORTABLE md5-bucket configuration: the oracle recomputes the
     16-dim unit vectors verbatim (bucket spec, index-ordered norm fold and
-    all). Production uses the same plan with xxhash64 buckets."""
+    all). Production uses the same plan with xxhash64 buckets. Emitted as
+    scalar (doc_id, dim, value) rows, one per vector component."""
     from ecokg_spark.operators.embed import hashed_bow_embed
 
     d = t(spark, sf, "documents").select("doc_id", "text")
-    return hashed_bow_embed(d, "text", "doc_id", dims=16, portable=True)
+    e = hashed_bow_embed(d, "text", "doc_id", dims=16, portable=True)
+    return e.select("doc_id", F.posexplode("embedding").alias("dim", "value"))
 
 
 def q_kmeans(spark, sf):
@@ -192,11 +199,13 @@ def q_int8_quantize(spark, sf):
     """Symmetric int8 embedding quantization (operators/embed.py
     int8_quantize): floor(x + 0.5) tie convention so both engines
     produce identical integers (ROUND would split HALF_UP/HALF_EVEN on
-    exact midpoints)."""
+    exact midpoints). Emitted as scalar (vec_id, scale, dim, value) rows,
+    one per quantized component."""
     from ecokg_spark.operators.embed import int8_quantize
 
     e = t(spark, sf, "embeddings")
-    return int8_quantize(e)
+    return int8_quantize(e).select(
+        "vec_id", "scale", F.posexplode("qvec").alias("dim", "value"))
 
 
 SQL_INT8_QUANTIZE = """
@@ -204,14 +213,18 @@ WITH v AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS x,
          list_aggregate(list_transform(CAST(embedding AS DOUBLE[]),
                                        y -> abs(y)), 'max') AS m
-  FROM embeddings)
-SELECT vec_id,
-       ROUND(m / 127.0, 6) AS scale,
-       CASE WHEN m > 0
-            THEN list_transform(x, y -> CAST(floor(127.0 * y / m + 0.5)
-                                             AS INT))
-            ELSE list_transform(x, y -> CAST(0 AS INT)) END AS qvec
-FROM v
+  FROM embeddings),
+q AS (
+  SELECT vec_id,
+         ROUND(m / 127.0, 6) AS scale,
+         CASE WHEN m > 0
+              THEN list_transform(x, y -> CAST(floor(127.0 * y / m + 0.5)
+                                               AS INT))
+              ELSE list_transform(x, y -> CAST(0 AS INT)) END AS qvec
+  FROM v)
+SELECT vec_id, scale, CAST(generate_subscripts(qvec, 1) - 1 AS INT) AS dim,
+       unnest(qvec) AS value
+FROM q
 """
 
 

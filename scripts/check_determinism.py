@@ -9,36 +9,22 @@ on the driver. This script runs every window query under two deliberately
 different configurations (local[4]/sp=4 vs local[32]/sp=64) and compares
 canonical (order-insensitive, full-precision) outputs between the two
 Spark runs. Any diff is a determinism bug regardless of what the oracle
-says.
+says; a row that raises under either configuration fails too, and an
+unknown name is rejected before any Spark session starts.
 
 Usage: python scripts/check_determinism.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from check_contract import rows_to_set
 from ecokg_spark.contract import QUERIES, _CERT_WINDOW
 from ecokg_spark.session import get_spark
-
-
-def canon(v):
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "nan"
-        return repr(v)
-    if isinstance(v, bytes):
-        return v.hex()
-    return str(v)
-
-
-def rows_to_set(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(tuple(canon(r[i]) for i in order) for r in rows)
 
 
 def run_all(master, shuffle_partitions, sf, names):
@@ -59,13 +45,20 @@ def run_all(master, shuffle_partitions, sf, names):
 def main():
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     names = sys.argv[2:] or list(_CERT_WINDOW)
+    unknown = sorted(set(names) - set(QUERIES))
+    if unknown:
+        sys.exit(f"unknown query name(s): {', '.join(unknown)}")
     a = run_all("local[4]", 4, sf, names)
     b = run_all("local[32]", 64, sf, names)
     failures = []
     for name in names:
-        if a[name] != b[name]:
+        if "ERROR" in (a[name][0], b[name][0]):
+            err = a[name][1] if a[name][0] == "ERROR" else b[name][1]
+            failures.append((name, err))
+            print(f"ERROR {name}: {err[:300]}")
+        elif a[name] != b[name]:
             detail = ""
-            if a[name][0] == b[name][0] and a[name][0] != "ERROR":
+            if a[name][0] == b[name][0]:
                 ra, rb = set(a[name][1]), set(b[name][1])
                 only_a = list(ra - rb)[:2]
                 only_b = list(rb - ra)[:2]
@@ -73,8 +66,9 @@ def main():
             failures.append((name, detail))
             print(f"NONDETERMINISTIC {name}{detail}")
         else:
-            print(f"ok {name} ({len(a[name][1]) if a[name][0] != 'ERROR' else a[name][1]} rows)")
-    print(f"\n{len(failures)} nondeterministic / {len(names)}")
+            print(f"ok {name} ({len(a[name][1])} rows)")
+    print(f"\n{len(failures)} failures (nondeterministic or erroring) / "
+          f"{len(names)}")
     sys.exit(1 if failures else 0)
 
 

@@ -7,9 +7,10 @@ stale / fresh, and prints the recommended next window: never-certified
 rows first (registry order), back-filled with the stalest certified rows.
 
 Usage: python scripts/plan_rotation.py [window_size]
-Then reorder the QUERIES dict in ecokg_spark/contract/__init__.py to put the
-printed names in positions 1..window_size (ORACLES order is irrelevant —
-only QUERIES order drives the window).
+Then set ``_CERT_WINDOW`` in ecokg_spark/contract/__init__.py to the printed
+names: ``_window_order`` moves them to positions 1..window_size of QUERIES
+(and ORACLES) and leaves the ``_ROWS`` table, and so every other row's
+relative order, as declared.
 """
 
 from __future__ import annotations

@@ -5,7 +5,8 @@ UDF stages narrow)."""
 import pytest
 from pyspark.sql import functions as F
 
-from ecokg_spark.contract import q_broadcast_join_agg, q_filter_project, q_multi_join
+from ecokg_spark.contract.relational import (
+    q_broadcast_join_agg, q_filter_project, q_multi_join)
 from ecokg_spark.plans.explain import (
     count_exchanges,
     has_broadcast_join,
@@ -93,7 +94,7 @@ def test_two_phase_salted_degree(spark):
     """Degree count must be two-phase: partial per (key, salt), final per
     key — two exchanges max, no single hot-key reducer."""
     from ecokg_spark.operators.stats import node_degree
-    from ecokg_spark.contract import t as load
+    from ecokg_spark.contract._shared import t as load
 
     o = load(spark, SF, "orders")
     edges = o.select(
