@@ -215,11 +215,11 @@ def q_minhash_banded(spark, sf):
     relation including the banding's candidate losses. This certifies the
     banded candidate generation itself, not an exhaustive stand-in
     (VERDICT r3 'what's wrong #2')."""
-    from ecokg_spark.operators.dedup import minhash_banded_portable_pairs
+    from ecokg_spark.operators.dedup import minhash_verified_pairs
 
     d = t(spark, sf, "documents")
-    return minhash_banded_portable_pairs(d, "text", "doc_id", threshold=0.5,
-                                         k=16, bands=4)
+    return minhash_verified_pairs(d, "text", "doc_id", threshold=0.5,
+                                  k=16, bands=4, portable=True)
 
 
 SQL_MINHASH_BANDED = f"""

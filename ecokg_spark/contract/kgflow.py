@@ -5,13 +5,13 @@ from __future__ import annotations
 from ecokg_spark.functions.curie import curie_prefix, make_curie
 from ecokg_spark.operators.extract import extract_text_udf
 from ecokg_spark.operators.linking import build_termlist, link_mentions
-from ecokg_spark.operators.merge import merge_edges, merge_nodes
-from ecokg_spark.operators.stats import count_by_predicate
+from ecokg_spark.operators.merge import (dedup_first_wins, merge_edges,
+                                         merge_nodes)
+from ecokg_spark.operators.stats import count_by_predicate, count_by_spo
 from ecokg_spark.operators.triples import extract_triple_udf
 from ecokg_spark.pipeline import build_kg
 from ecokg_spark.sources.pages import synth_pages
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 from ecokg_spark.contract._shared import (
     _HEX15,
     _LOWTOK_SQL,
@@ -76,14 +76,12 @@ GROUP BY c_nationkey
 
 
 def q_first_wins(spark, sf):
-    """A2 first-wins semantics: earliest order per customer via window."""
+    """A2 first-wins semantics (operators/merge.py dedup_first_wins):
+    earliest order per customer, ties broken by order key."""
     o = t(spark, sf, "orders")
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    return (
-        o.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select("o_custkey", "o_orderkey", "o_orderdate")
-    )
+    return dedup_first_wins(
+        o, ["o_custkey"], F.struct("o_orderdate", "o_orderkey")
+    ).select("o_custkey", "o_orderkey", "o_orderdate")
 
 
 SQL_FIRST_WINS = """
@@ -141,21 +139,29 @@ FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
 
 
 def q_count_by_spo(spark, sf):
-    """A3 graph-stats facet: (subject-class, predicate, object-class) counts
-    over edges synthesized from orders."""
-    o = t(spark, sf, "orders")
-    e = o.select(
+    """A3 graph-stats facet (operators/stats.py count_by_spo):
+    (subject category, predicate, object category) counts over a graph
+    derived from TPC-H — customer nodes (category = market segment),
+    order nodes (category = order status), one customer->order edge per
+    order with the order priority as predicate."""
+    o, c = t(spark, sf, "orders"), t(spark, sf, "customer")
+    nodes = c.select(make_curie("C", "c_custkey").alias("id"),
+                     F.col("c_mktsegment").alias("category")).unionByName(
+        o.select(make_curie("O", "o_orderkey").alias("id"),
+                 F.col("o_orderstatus").alias("category")))
+    edges = o.select(
         make_curie("C", "o_custkey").alias("subject"),
         F.col("o_orderpriority").alias("predicate"),
-        F.col("o_orderstatus").alias("object"),
+        make_curie("O", "o_orderkey").alias("object"),
     )
-    return e.groupBy("predicate", "object").agg(F.count(F.lit(1)).cast("long").alias("n"))
+    return count_by_spo(edges, nodes)
 
 
 SQL_COUNT_BY_SPO = """
-SELECT o_orderpriority AS predicate, o_orderstatus AS object,
-       CAST(COUNT(*) AS BIGINT) AS n
-FROM orders GROUP BY 1, 2
+SELECT c_mktsegment AS subject_category, o_orderpriority AS predicate,
+       o_orderstatus AS object_category, CAST(COUNT(*) AS BIGINT) AS n
+FROM orders JOIN customer ON c_custkey = o_custkey
+GROUP BY 1, 2, 3
 """
 
 

@@ -54,9 +54,16 @@ class TableIO:
         return self.spark.read.parquet(self._path(name))
 
     def exists(self, name: str) -> bool:
+        """True once `name` holds data: the Iceberg table exists, or the
+        parquet directory carries `_SUCCESS` or a `.parquet` file (an
+        empty directory, e.g. a fresh mkdtemp handed to a streaming sink,
+        is no table yet)."""
         if self.iceberg:
             return self.spark.catalog.tableExists(name)
-        return os.path.isdir(self._path(name))
+        path = self._path(name)
+        return os.path.isfile(os.path.join(path, "_SUCCESS")) or (
+            os.path.isdir(path)
+            and any(f.endswith(".parquet") for f in os.listdir(path)))
 
     def committed(self, name: str) -> bool:
         """True once a write of `name` has fully committed: the table
@@ -104,8 +111,9 @@ class TableIO:
 
         With an Iceberg catalog this is a real in-place ``MERGE INTO``
         (``WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *``);
-        on the parquet fallback it is the anti-join emulation the streaming
-        sink already uses (streaming/merge_sink.py):
+        on the parquet fallback it is an anti-join emulation. This is the
+        one upsert path: the streaming sink's foreachBatch bodies
+        (streaming/merge_sink.py) call it too.
 
         - ``when_matched="update"``: kept = target ANTI source(keys);
           rewrite kept UNION source atomically (stage dir + rename — the

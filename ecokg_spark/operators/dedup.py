@@ -5,11 +5,13 @@ duplicate-pair table so callers can pick keep/drop policy:
 
   exact_dedup           md5-of-normalized-text groupBy (one shuffle on a
                         16-byte key; at 100 TB this is the always-first pass)
-  minhash_lsh_pairs     word-shingle MinHash + banded LSH bucket join ->
-                        candidate pairs -> exact Jaccard verify. All hashing
-                        is `xxhash64` Catalyst expressions (JVM, codegen);
-                        the shuffle key is (band_idx, band_hash) — uniform
-                        by construction, no skew.
+  minhash_verified_pairs word-shingle MinHash + banded LSH bucket join ->
+                        candidate pairs -> exact Jaccard verify, over the
+                        one banding kernel `minhash_bands` (`xxhash64`
+                        Catalyst expressions, or a portable md5 spec a SQL
+                        oracle recomputes); the shuffle key is
+                        (band_idx, band_key) — uniform by construction, no
+                        skew.
   simhash_pairs         64-bit SimHash (Charikar) via bit-vote aggregation
                         over token hashes, pure expressions; near-dup =
                         hamming distance <= k via xor+popcount. Banded on
@@ -46,57 +48,56 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     return fp.join(keep, [ "_fp", id_col], "inner").drop("_fp")
 
 
-def _minhash_sigs(df: DataFrame, text_col: str, id_col: str, k: int) -> DataFrame:
-    """(id, _sig array<long>) via staged-token explode + k tiny
-    min-aggregates — tokenization runs once per doc, the shingle HOF over a
-    materialized token column (6x faster than the inline expression), and
-    codegen stays small."""
-    ex = with_word_shingles(df.select(F.col(id_col), F.col(text_col)), text_col
-                            ).select(id_col, "_sh")
-    sig = ex.groupBy(id_col).agg(
-        *[F.min(F.xxhash64("_sh", F.lit(seed))).alias(f"_s{seed}") for seed in range(k)]
-    )
-    return sig.select(id_col, F.array(*[f"_s{i}" for i in range(k)]).alias("_sig"))
+def minhash_bands(shingles: DataFrame, keys: list[str], k: int, bands: int,
+                  spec: str = "xxhash64") -> DataFrame:
+    """(keys..., band_idx, band_key) MinHash-LSH banding table — the one
+    signature-and-banding kernel behind every MinHash caller (the dedup
+    funnels below and linking.lsh_band_table).
 
+    `shingles` holds one exploded row per shingle, (keys..., _sh), so a
+    funnel signs exactly the set it verifies. Signature value i is the
+    aggregate min(hash_i(_sh)) over those rows: small codegen, one keyed
+    shuffle (inlining a shingle expression into the k hash expressions
+    instead makes codegen take minutes). Band b covers signature values
+    b*rows .. b*rows + rows-1, rows = k/bands.
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.7,
-    k: int = MINHASH_K,
-    bands: int = BANDS,
-) -> DataFrame:
-    """Near-duplicate pairs (id_a, id_b, jaccard_est) with estimated
-    shingle-Jaccard >= threshold. jaccard_est = fraction of agreeing
-    minhashes (unbiased estimator)."""
+    spec:
+      'xxhash64'  hash_i(s) = xxhash64(s, i); band key = xxhash64(b, the
+                  band's values). JVM codegen — the production path.
+      'md5'       PORTABLE: hash_i(s) = the first 15 hex chars of
+                  md5('<i>:' || s) parsed base-16 (60 bits, fits BIGINT on
+                  any engine; Spark parses with conv(), DuckDB with a
+                  strpos digit polynomial); band key = the band's values
+                  comma-joined in seed order — a plain string both engines
+                  format identically, so a SQL oracle recomputes the
+                  banding (losses and all) bit for bit.
+    """
+    if k % bands != 0:
+        raise ValueError(f"bands={bands} must divide k={k}")
     rows = k // bands
-    sigs = _minhash_sigs(df, text_col, id_col, k)
-    banded = sigs.select(
-        id_col,
-        "_sig",
-        F.posexplode(
-            F.array(*[
-                F.xxhash64(F.lit(b), *[F.element_at("_sig", b * rows + r + 1) for r in range(rows)])
-                for b in range(bands)
-            ])
-        ).alias("band_idx", "band_hash"),
-    )
-    a = banded.select(F.col(id_col).alias("id_a"), F.col("_sig").alias("_sig_a"),
-                      "band_idx", "band_hash")
-    b = banded.select(F.col(id_col).alias("id_b"), F.col("_sig").alias("_sig_b"),
-                      "band_idx", "band_hash")
-    cand = (
-        a.join(b, ["band_idx", "band_hash"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "_sig_a", "_sig_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    agree = F.size(
-        F.filter(F.zip_with("_sig_a", "_sig_b", lambda x, y: x == y), lambda z: z)
-    )
-    est = (agree / F.lit(float(k))).alias("jaccard_est")
-    return cand.select("id_a", "id_b", est).where(F.col("jaccard_est") >= threshold)
+    if spec == "xxhash64":
+        def minhash(seed: int) -> Column:
+            return F.xxhash64("_sh", F.lit(seed))
+
+        def band_key(b: int, vals: list[Column]) -> Column:
+            return F.xxhash64(F.lit(b), *vals)
+    elif spec == "md5":
+        def minhash(seed: int) -> Column:
+            h = F.md5(F.concat(F.lit(f"{seed}:"), F.col("_sh")))
+            return F.conv(F.substring(h, 1, 15), 16, 10).cast("long")
+
+        def band_key(b: int, vals: list[Column]) -> Column:
+            return F.concat_ws(",", *[v.cast("string") for v in vals])
+    else:
+        raise ValueError(f"spec={spec!r}")
+    sig = shingles.groupBy(*keys).agg(
+        *[F.min(minhash(i)).alias(f"_m{i}") for i in range(k)])
+    keys_by_band = F.array(*[
+        band_key(b, [F.col(f"_m{b * rows + r}") for r in range(rows)])
+        for b in range(bands)
+    ])
+    return sig.select(
+        *keys, F.posexplode(keys_by_band).alias("band_idx", "band_key"))
 
 
 def _shingle_sets(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
@@ -109,12 +110,35 @@ def _shingle_sets(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFram
     )
 
 
-def _exact_verify(cand: DataFrame, sets: DataFrame, id_col: str,
-                  threshold: float) -> DataFrame:
-    """Join candidate pairs to their shingle arrays, exact Jaccard
-    (array_intersect, JVM-side), threshold. cand: (id_a, id_b)."""
-    pa = sets.select(F.col(id_col).alias("id_a"), F.col("_set").alias("_seta"))
-    pb = sets.select(F.col(id_col).alias("id_b"), F.col("_set").alias("_setb"))
+def _set_bands(sets: DataFrame, id_col: str, k: int, bands: int,
+               spec: str) -> DataFrame:
+    """minhash_bands over a (id, _set) shingle-set table."""
+    return minhash_bands(sets.select(id_col, F.explode("_set").alias("_sh")),
+                         [id_col], k, bands, spec)
+
+
+def _band_join(bands_a: DataFrame, id_col: str,
+               bands_b: DataFrame | None = None) -> DataFrame:
+    """(id_a, id_b), one row per shared (band_idx, band_key) bucket — the
+    uniform bucket-join shuffle. id_a comes from bands_a, id_b from
+    bands_b; without bands_b it is a self-join keeping id_a < id_b."""
+    a = bands_a.select(F.col(id_col).alias("id_a"), "band_idx", "band_key")
+    b = (bands_a if bands_b is None else bands_b).select(
+        F.col(id_col).alias("id_b"), "band_idx", "band_key")
+    pairs = a.join(b, ["band_idx", "band_key"])
+    if bands_b is None:
+        pairs = pairs.where(F.col("id_a") < F.col("id_b"))
+    return pairs.select("id_a", "id_b")
+
+
+def _verify(cand: DataFrame, id_col: str, threshold: float,
+            sets_a: DataFrame, sets_b: DataFrame | None = None) -> DataFrame:
+    """Join candidate pairs (id_a, id_b) to their shingle arrays — id_a
+    from sets_a, id_b from sets_b (default sets_a) — exact Jaccard
+    (array_intersect, JVM-side), threshold."""
+    sets_b = sets_a if sets_b is None else sets_b
+    pa = sets_a.select(F.col(id_col).alias("id_a"), F.col("_set").alias("_seta"))
+    pb = sets_b.select(F.col(id_col).alias("id_b"), F.col("_set").alias("_setb"))
     inter = F.size(F.array_intersect("_seta", "_setb"))
     jac = inter / (F.size("_seta") + F.size("_setb") - inter)
     return (
@@ -122,6 +146,29 @@ def _exact_verify(cand: DataFrame, sets: DataFrame, id_col: str,
         .select("id_a", "id_b", jac.cast("double").alias("jaccard"))
         .where(F.col("jaccard") >= threshold)
     )
+
+
+def _candidates(sets: DataFrame, id_col: str, threshold: float, k: int,
+                bands: int, spec: str) -> DataFrame:
+    """Candidate (id_a, id_b) pairs within one shingle-set table."""
+    pairs = _band_join(_set_bands(sets, id_col, k, bands, spec), id_col)
+    if bands == k and spec == "xxhash64":
+        # exhaustive: every minhash is its own band; agreement count ==
+        # per-pair row count in the bucket join (no sig arrays ride it),
+        # and the estimator prefilter culls the bulky candidate set. The
+        # portable spec takes no estimator cut, so its relation stays
+        # exactly what a SQL oracle recomputes.
+        est_floor = max(threshold - 0.25, 0.0)
+        return (
+            pairs.groupBy("id_a", "id_b")
+            .agg(F.count(F.lit(1)).alias("_agree"))
+            .where(F.col("_agree") >= F.lit(est_floor * k))
+            .select("id_a", "id_b")
+        )
+    # banded: one hash per band over its `rows` sig values — uniform
+    # (band_idx, band_key) shuffle key, candidates ~ true near-dup pairs
+    # only, so no prefilter is needed
+    return pairs.dropDuplicates(["id_a", "id_b"])
 
 
 def minhash_verified_pairs(
@@ -132,6 +179,7 @@ def minhash_verified_pairs(
     k: int = MINHASH_K,
     n: int = 3,
     bands: int = BANDS,
+    portable: bool = False,
 ) -> DataFrame:
     """Near-duplicate pairs (id_a, id_b, jaccard) with EXACT shingle-set
     Jaccard >= threshold — the deployable LSH-then-verify funnel.
@@ -159,11 +207,18 @@ def minhash_verified_pairs(
 
     Final stage for both: exact Jaccard via array_intersect over the
     materialized distinct-shingle arrays; only the exact value is emitted
-    and thresholded. Use `minhash_lsh_pairs` when an estimated Jaccard is
-    enough."""
-    cand = minhash_candidate_pairs(df, text_col, id_col, threshold, k, bands)
-    return _exact_verify(cand, _shingle_sets(df, text_col, id_col, n),
-                         id_col, threshold)
+    and thresholded. The minhashes sign the same word n-shingle sets the
+    verify step compares.
+
+    ``portable=True`` bands under the portable md5 spec (minhash_bands)
+    without the estimator prefilter, so a SQL oracle recomputes the
+    IDENTICAL relation, banding losses and all: the contract row
+    minhash_banded certifies the production plan shape itself at k=16 x
+    4 bands (tractable oracle md5 volume, the same rows=4 banding)."""
+    sets = _shingle_sets(df, text_col, id_col, n)
+    cand = _candidates(sets, id_col, threshold, k, bands,
+                       "md5" if portable else "xxhash64")
+    return _verify(cand, id_col, threshold, sets)
 
 
 def minhash_candidate_pairs(
@@ -175,151 +230,12 @@ def minhash_candidate_pairs(
     bands: int = BANDS,
 ) -> DataFrame:
     """Candidate (id_a, id_b) pairs exactly as minhash_verified_pairs
-    generates them BEFORE exact verification — also exposed standalone for
-    candidate-volume plan tests (the 100-TB scale property lives in this
-    stage's row count, not the verified output)."""
-    if k % bands != 0:
-        raise ValueError(f"bands={bands} must divide k={k}")
-    rows = k // bands
-    sigs = _minhash_sigs(df, text_col, id_col, k)
-    if rows == 1:
-        # exhaustive: every minhash is its own band; agreement count ==
-        # per-pair row count in the bucket join (no sig arrays ride it),
-        # and the estimator prefilter culls the bulky candidate set
-        est_floor = max(threshold - 0.25, 0.0)
-        banded = sigs.select(
-            id_col, F.posexplode("_sig").alias("band_idx", "band_hash"))
-        a = banded.select(F.col(id_col).alias("id_a"), "band_idx", "band_hash")
-        b = banded.select(F.col(id_col).alias("id_b"), "band_idx", "band_hash")
-        return (
-            a.join(b, ["band_idx", "band_hash"])
-            .where(F.col("id_a") < F.col("id_b"))
-            .groupBy("id_a", "id_b")
-            .agg(F.count(F.lit(1)).alias("_agree"))
-            .where(F.col("_agree") >= F.lit(est_floor * k))
-            .select("id_a", "id_b")
-        )
-    # banded: one 64-bit hash per band over its `rows` sig values —
-    # uniform (band_idx, band_hash) shuffle key, candidates ~ true
-    # near-dup pairs only, so no prefilter is needed
-    banded = sigs.select(
-        id_col,
-        F.posexplode(
-            F.array(*[
-                F.xxhash64(F.lit(bd), *[
-                    F.element_at("_sig", bd * rows + r + 1)
-                    for r in range(rows)])
-                for bd in range(bands)
-            ])
-        ).alias("band_idx", "band_hash"),
-    )
-    a = banded.select(F.col(id_col).alias("id_a"), "band_idx", "band_hash")
-    b = banded.select(F.col(id_col).alias("id_b"), "band_idx", "band_hash")
-    return (
-        a.join(b, ["band_idx", "band_hash"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-
-
-def minhash_banded_portable_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
-    k: int = 16,
-    bands: int = 4,
-    n: int = 3,
-) -> DataFrame:
-    """The BANDED LSH-then-verify funnel over a PORTABLE md5 minhash spec,
-    so a SQL oracle recomputes the IDENTICAL relation — banding losses and
-    all (same idea as simhash_pairs' md5 spec: certify the production
-    plan shape itself, not just an exhaustive stand-in).
-
-    Hash spec (engine-portable): minhash value for seed i of shingle s is
-    the first 15 hex chars of md5('<i>:' || s) parsed base-16 (60 bits,
-    fits BIGINT on any engine; Spark parses with conv(), DuckDB with a
-    strpos digit polynomial). Band key = the band's `k/bands` min values
-    comma-joined in seed order — a plain string both engines format
-    identically. Candidates = pairs agreeing on any full band; verify =
-    exact shingle Jaccard >= threshold.
-
-    The plan is shaped exactly like minhash_candidate_pairs' banded path:
-    one uniform (band_idx, band_key) bucket-join shuffle, candidates ~
-    true near-dups, exact verify on the survivors. Default k=16 x 4 bands
-    keeps the oracle's md5 volume (docs x shingles x k) tractable while
-    exercising the same rows=4 banding the xxhash64 production path uses."""
-    sets, banded = _portable_banded(df, text_col, id_col, k, bands, n)
-    a = banded.select(F.col(id_col).alias("id_a"), "band_idx", "band_key")
-    b = banded.select(F.col(id_col).alias("id_b"), "band_idx", "band_key")
-    cand = (
-        a.join(b, ["band_idx", "band_key"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    return _exact_verify(cand, sets, id_col, threshold)
-
-
-def _portable_banded(df: DataFrame, text_col: str, id_col: str, k: int,
-                     bands: int, n: int):
-    """(shingle sets, banded keys) under the portable md5 minhash spec —
-    shared by minhash_banded_portable_pairs (within one table) and
-    incremental_dedup (across a new batch and an existing corpus)."""
-    if k % bands != 0:
-        raise ValueError(f"bands={bands} must divide k={k}")
-    rows = k // bands
-    sets = _shingle_sets(df, text_col, id_col, n)
-    sh = sets.select(id_col, F.explode("_set").alias("_s"))
-
-    def mh(seed: int):
-        h = F.md5(F.concat(F.lit(f"{seed}:"), F.col("_s")))
-        return F.conv(F.substring(h, 1, 15), 16, 10).cast("long")
-
-    sig = sh.groupBy(id_col).agg(
-        *[F.min(mh(i)).alias(f"_m{i}") for i in range(k)])
-    band_keys = F.array(*[
-        F.concat_ws(",", *[F.col(f"_m{b * rows + r}").cast("string")
-                           for r in range(rows)])
-        for b in range(bands)
-    ])
-    banded = sig.select(
-        id_col, F.posexplode(band_keys).alias("band_idx", "band_key"))
-    return sets, banded
-
-
-def _exact_verify_cross(cand: DataFrame, sets_a: DataFrame,
-                        sets_b: DataFrame, id_col: str,
-                        threshold: float) -> DataFrame:
-    """_exact_verify across TWO set tables: cand (id_a, id_b) with id_a
-    from sets_a and id_b from sets_b."""
-    pa = sets_a.select(F.col(id_col).alias("id_a"),
-                       F.col("_set").alias("_seta"))
-    pb = sets_b.select(F.col(id_col).alias("id_b"),
-                       F.col("_set").alias("_setb"))
-    inter = F.size(F.array_intersect("_seta", "_setb"))
-    jac = inter / (F.size("_seta") + F.size("_setb") - inter)
-    return (
-        cand.join(pa, "id_a").join(pb, "id_b")
-        .select("id_a", "id_b", jac.cast("double").alias("jaccard"))
-        .where(F.col("jaccard") >= threshold)
-    )
-
-
-def _xxh_banded(sigs: DataFrame, id_col: str, k: int,
-                bands: int) -> DataFrame:
-    """(id, band_idx, band_key) from xxhash64 signatures — the fast
-    production banding (one 64-bit hash per band over its rows)."""
-    rows = k // bands
-    return sigs.select(
-        id_col,
-        F.posexplode(F.array(*[
-            F.xxhash64(F.lit(bd), *[F.element_at("_sig", bd * rows + r + 1)
-                                    for r in range(rows)])
-            for bd in range(bands)
-        ])).alias("band_idx", "band_key"),
-    )
+    generates them (at its default n=3, xxhash64) BEFORE exact
+    verification — also exposed standalone for candidate-volume plan
+    tests (the 100-TB scale property lives in this stage's row count, not
+    the verified output)."""
+    return _candidates(_shingle_sets(df, text_col, id_col, 3), id_col,
+                       threshold, k, bands, "xxhash64")
 
 
 def incremental_dedup(
@@ -359,49 +275,29 @@ def incremental_dedup(
     (~true near-dups); nothing ever rescans the corpus text. Returns the
     admitted rows of `new_docs`.
     """
-    from ecokg_spark.functions.text import doc_fingerprint
-
     fp_new = new_docs.withColumn("_fp", doc_fingerprint(text_col))
     keep1 = fp_new.groupBy("_fp").agg(F.min(id_col).alias(id_col))
     s1 = fp_new.join(keep1, ["_fp", id_col])
     cfp = corpus.select(doc_fingerprint(text_col).alias("_fp")).distinct()
     s2 = s1.join(cfp, "_fp", "left_anti").drop("_fp")
 
-    if portable:
-        # md5 spec — exactly what the SQL oracle recomputes
-        nsets, nband = _portable_banded(s2, text_col, id_col, k, bands, n)
-        csets, cband = _portable_banded(corpus, text_col, id_col, k, bands,
-                                        n)
-    else:
-        # xxhash64 production banding (same funnel; ~6x faster hashing)
-        nsets = _shingle_sets(s2, text_col, id_col, n)
-        csets = _shingle_sets(corpus, text_col, id_col, n)
-        nband = _xxh_banded(_minhash_sigs(s2, text_col, id_col, k),
-                            id_col, k, bands)
-        cband = _xxh_banded(_minhash_sigs(corpus, text_col, id_col, k),
-                            id_col, k, bands)
-    cross = (
-        nband.select(F.col(id_col).alias("id_a"), "band_idx", "band_key")
-        .join(cband.select(F.col(id_col).alias("id_b"), "band_idx",
-                           "band_key"), ["band_idx", "band_key"])
-        .select("id_a", "id_b").dropDuplicates(["id_a", "id_b"])
-    )
-    hit = _exact_verify_cross(cross, nsets, csets, id_col, threshold)
+    # md5 spec — exactly what the SQL oracle recomputes; xxhash64 is the
+    # production banding (same funnel; ~6x faster hashing)
+    spec = "md5" if portable else "xxhash64"
+    nsets = _shingle_sets(s2, text_col, id_col, n)
+    csets = _shingle_sets(corpus, text_col, id_col, n)
+    nband = _set_bands(nsets, id_col, k, bands, spec)
+    cband = _set_bands(csets, id_col, k, bands, spec)
+    cross = _band_join(nband, id_col, cband).dropDuplicates(["id_a", "id_b"])
+    hit = _verify(cross, id_col, threshold, nsets, csets)
     s3 = s2.join(hit.select(F.col("id_a").alias(id_col)).distinct(),
                  id_col, "left_anti")
 
     # stage 4 reuses the stage-3 bands/sets (one minhash pass for both
     # stages), restricted to the stage-3 survivors
-    ids3 = s3.select(id_col)
-    band3 = nband.join(ids3, id_col, "left_semi")
-    cand3 = (
-        band3.select(F.col(id_col).alias("id_a"), "band_idx", "band_key")
-        .join(band3.select(F.col(id_col).alias("id_b"), "band_idx",
-                           "band_key"), ["band_idx", "band_key"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b").dropDuplicates(["id_a", "id_b"])
-    )
-    batch_pairs = _exact_verify(cand3, nsets, id_col, threshold)
+    band3 = nband.join(s3.select(id_col), id_col, "left_semi")
+    cand3 = _band_join(band3, id_col).dropDuplicates(["id_a", "id_b"])
+    batch_pairs = _verify(cand3, id_col, threshold, nsets)
     drops = batch_pairs.select(F.col("id_b").alias(id_col)).distinct()
     return s3.join(drops, id_col, "left_anti")
 
@@ -1020,12 +916,12 @@ def fuzzy_dedup(
     verify -> connected components over the near-dup pair graph -> keep
     exactly ONE document per cluster (min id), return the kept rows.
 
-    Default candidates come from ``minhash_candidate_pairs`` (xxhash64
-    banding — the fast production path; ~17x faster than md5 at sf0.1);
-    ``portable=True`` switches to ``minhash_banded_portable_pairs``
-    (portable md5 spec, so a SQL oracle recomputes the WHOLE funnel
-    including banding losses — the contract row's configuration). Both
-    share the ``_keep_by_pairs`` retention rule; exact verification
+    Pairs come from ``minhash_verified_pairs``: xxhash64 banding by
+    default (the fast production path; ~17x faster than md5 at sf0.1);
+    ``portable=True`` switches to the portable md5 spec, so a SQL oracle
+    recomputes the WHOLE funnel including banding losses — the contract
+    row's configuration. Both share the ``_keep_by_pairs`` retention
+    rule; exact verification
     makes the SURVIVOR SET identical whenever the two bandings yield the
     same verified pairs (recall differences are the only divergence).
 
@@ -1037,16 +933,8 @@ def fuzzy_dedup(
     certified by its own contract row (minhash_banded,
     connected_components); this row certifies their composition.
     """
-    if portable:
-        pairs = minhash_banded_portable_pairs(
-            df, text_col, id_col, threshold=threshold, k=k, bands=bands,
-            n=n)
-    else:
-        cand = minhash_candidate_pairs(df, text_col, id_col,
-                                       threshold=threshold, k=k,
-                                       bands=bands)
-        sets = _shingle_sets(df, text_col, id_col, n)
-        pairs = _exact_verify(cand, sets, id_col, threshold)
+    pairs = minhash_verified_pairs(df, text_col, id_col, threshold=threshold,
+                                   k=k, n=n, bands=bands, portable=portable)
     return _keep_by_pairs(df, pairs, id_col, transitive)
 
 

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ecokg_spark.operators.dedup import minhash_bands
+
 EXCLUDE_CATEGORIES = ["biolink:Publication"]  # biohub_converter.py EXCLUDE
 
 # a small stopword set (stopwords.yaml semantics): mentions that are bare
@@ -85,25 +87,12 @@ def lsh_band_table(
     k: int = MINHASH_K,
     bands: int = LSH_BANDS,
 ) -> DataFrame:
-    """(keep_cols..., band_idx, band_hash) MinHash-LSH banding table.
-
-    Explode-then-aggregate shape: the shingle expression is evaluated ONCE
-    per row (explode), then k minhashes are k tiny `min(xxhash64(sh, seed))`
-    aggregates — small codegen, one keyed shuffle, scales with input size.
-    (An earlier all-expression variant inlined the shingle expr k*bands
-    times and spent minutes in codegen — don't go back to it.)"""
-    rows = k // bands
+    """(keep_cols..., band_idx, band_hash) MinHash-LSH banding table: the
+    shared kernel (dedup.minhash_bands, xxhash64 spec) over each row's
+    char-2-gram shingles, exploded once per row."""
     ex = df.select(*keep_cols, F.explode(_shingles(F.col(text_col))).alias("_sh"))
-    sig = ex.groupBy(*keep_cols).agg(
-        *[F.min(F.xxhash64("_sh", F.lit(seed))).alias(f"_s{seed}") for seed in range(k)]
-    )
-    band_hashes = F.array(
-        *[F.xxhash64(F.lit(b), *[F.col(f"_s{b * rows + r}") for r in range(rows)])
-          for b in range(bands)]
-    )
-    return sig.select(
-        *keep_cols, F.posexplode(band_hashes).alias("band_idx", "band_hash")
-    )
+    return minhash_bands(ex, keep_cols, k, bands).withColumnRenamed(
+        "band_key", "band_hash")
 
 
 def link_mentions(

@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -68,10 +68,12 @@ def dedup_min(df: DataFrame, keys: list[str]) -> DataFrame:
         .select(*df.columns)
 
 
-def dedup_first_wins(df: DataFrame, keys: list[str], order_col: str) -> DataFrame:
+def dedup_first_wins(df: DataFrame, keys: list[str],
+                     order_col: str | Column) -> DataFrame:
     """Reference first-occurrence dedup (A2, eol_traits.py:250-267): keep the
     row with the smallest `order_col` per key — the distributed equivalent of
-    'first row in file order'."""
+    'first row in file order'. A struct orders lexicographically, so
+    F.struct(a, b) breaks ties on a by b."""
     from pyspark.sql.window import Window
 
     w = Window.partitionBy(*keys).orderBy(order_col)

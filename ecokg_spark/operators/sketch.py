@@ -7,7 +7,7 @@ the same question within ~1.04/sqrt(2^p) relative error (Flajolet et al.
 2007, AofA; the LinearCounting small-range correction per the HLL paper's
 §4 / Heule et al. 2013 practice).
 
-PORTABILITY SPEC (same philosophy as dedup.minhash_banded_portable_pairs):
+PORTABILITY SPEC (same philosophy as dedup.minhash_bands' md5 spec):
 hash = first 15 hex chars of md5(value) parsed base-16 (60 bits, fits
 BIGINT in any engine); bucket = top p bits; rho = leading-zero count of
 the remaining (60-p)-bit word + 1, computed via the INTEGER identity

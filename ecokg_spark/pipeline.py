@@ -19,7 +19,7 @@ Shuffle budget of the whole plan (the thing that matters at 100 TB):
   edge dedup + merge ...... the one corpus-sized shuffle: a single hash
                             aggregate on (s,p,o); its map-side partial
                             collapses the hot head entity pre-shuffle
-  stats ................... hash aggs; degree count salted two-phase
+  stats ................... hash aggs (counts by category and predicate)
 
 The dataflow is declared once, as the ordered stage list `kg_stages`, and
 run two ways through checkpoint.run_dag: `build_kg` materializes it in

@@ -5,16 +5,17 @@ Completes the streaming story (fused ingest -> stateful ops -> HERE):
 each micro-batch of new edges is deduplicated against the table built so
 far — the streaming equivalent of the batch (s,p,o) merge aggregate
 (operators/merge.py), with exactly-once delivery from the sink
-checkpoint + idempotent anti-join-then-append writes:
+checkpoint + idempotent insert-only upserts. Both upsert bodies go
+through the one upsert path, TableIO.merge_into(..., when_matched="ignore"),
+whose parquet form is anti-join-then-append:
 
   batch_n: new = batch.dropDuplicates(keys) ANTI-JOIN existing(keys)
            append(new)
 
 A replayed micro-batch (failure between append and commit) re-runs the
 anti-join against a table that already contains its rows, appending
-nothing — idempotence without a transactional store. On Iceberg the same
-hook body becomes a MERGE INTO; the anti-join form is the
-format-agnostic fallback (same TableIO philosophy, io.py).
+nothing — idempotence without a transactional store. With an Iceberg
+catalog merge_into runs the same upsert as a real MERGE INTO.
 
 At scale the anti-join's build side is the EXISTING table keyed by
 (s,p,o); bucket the table by subject (TableIO.write_bucketed) to keep the
@@ -25,32 +26,29 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ecokg_spark.io import TableIO
+from ecokg_spark.operators.merge import dedup_first_wins
 
 EDGE_KEYS = ["subject", "predicate", "object"]
 
 
-def _existing_keys(spark, table_path: str, keys: list[str]):
-    """The (key-projected) table built so far, or None before first write."""
-    if os.path.exists(os.path.join(table_path, "_SUCCESS")) or any(
-        f.endswith(".parquet") for f in (
-            os.listdir(table_path) if os.path.isdir(table_path) else [])
-    ):
-        return spark.read.parquet(table_path).select(*keys)
-    return None
+def _table(spark, table_path: str) -> tuple[TableIO, str]:
+    """(TableIO, name) addressing the sink's directory: its parent is the
+    warehouse, its base name the table."""
+    warehouse, name = os.path.split(table_path.rstrip(os.sep))
+    if "." in name:  # TableIO would read the dot as a namespace separator
+        raise ValueError(f"sink table directory {name!r} contains '.'")
+    return TableIO(spark, warehouse), name
 
 
 def upsert_edges_batch(batch: DataFrame, table_path: str,
                        keys: list[str] | None = None) -> None:
     """foreachBatch body: append only (key-)new rows to `table_path`."""
-    keys = keys or EDGE_KEYS
-    spark = batch.sparkSession
-    fresh = batch.dropDuplicates(keys)
-    existing = _existing_keys(spark, table_path, keys)
-    if existing is not None:
-        fresh = fresh.join(existing, keys, "left_anti")
-    fresh.write.mode("append").parquet(table_path)
+    io, name = _table(batch.sparkSession, table_path)
+    io.merge_into(batch, name, keys or EDGE_KEYS, when_matched="ignore")
 
 
 def upsert_first_wins_batch(batch: DataFrame, table_path: str,
@@ -63,14 +61,9 @@ def upsert_first_wins_batch(batch: DataFrame, table_path: str,
     the batch exact-dedup aggregate (operators/dedup.py exact_dedup).
     Same idempotence argument as upsert_edges_batch: a replayed batch
     anti-joins against a table that already has its keys."""
-    spark = batch.sparkSession
-    w = Window.partitionBy(key).orderBy(order_col)
-    fresh = (batch.withColumn("_rn", F.row_number().over(w))
-             .where(F.col("_rn") == 1).drop("_rn"))
-    existing = _existing_keys(spark, table_path, [key])
-    if existing is not None:
-        fresh = fresh.join(existing, [key], "left_anti")
-    fresh.write.mode("append").parquet(table_path)
+    io, name = _table(batch.sparkSession, table_path)
+    io.merge_into(dedup_first_wins(batch, [key], order_col), name, [key],
+                  when_matched="ignore")
 
 
 def incremental_edge_merge(edge_stream: DataFrame, table_path: str,
@@ -103,18 +96,15 @@ def merge_hll_registers_batch(batch: DataFrame, table_path: str,
     per batch (register tables are tiny — 2^p rows — so the rewrite is
     metadata-cheap; an Iceberg MERGE would do it in place). A replayed
     batch max-combines values already absorbed — idempotent, max is."""
-    import os
     import shutil
 
     from ecokg_spark.operators.sketch import hll_registers
 
-    spark = batch.sparkSession
     gcols = list(group_cols or [])
     regs = hll_registers(batch, value_col, p=p, group_cols=gcols)
-    existing = _existing_keys(spark, table_path,
-                              gcols + ["bucket", "register"])
-    if existing is not None:
-        regs = (regs.unionByName(existing)
+    io, name = _table(batch.sparkSession, table_path)
+    if io.exists(name):
+        regs = (regs.unionByName(io.read(name))
                 .groupBy(*gcols, "bucket")
                 .agg(F.max("register").alias("register")))
     tmp = table_path + ".tmp"

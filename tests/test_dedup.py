@@ -1,12 +1,13 @@
 """Training-data dedup operators: exact, MinHash-LSH, SimHash, n-gram
 Jaccard, embedding cosine."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from ecokg_spark.operators.dedup import (
     embedding_neardup_pairs,
     exact_dedup,
-    minhash_lsh_pairs,
+    minhash_verified_pairs,
     ngram_jaccard_pairs,
     simhash_pairs,
     with_simhash,
@@ -33,7 +34,7 @@ def test_exact_dedup(spark):
 
 def test_minhash_lsh_finds_neardup(spark):
     pairs = {(r["id_a"], r["id_b"]) for r in
-             minhash_lsh_pairs(_docs(spark), threshold=0.5).collect()}
+             minhash_verified_pairs(_docs(spark), threshold=0.5).collect()}
     assert (1, 2) in pairs and (1, 4) in pairs
     assert not any({a, b} == {1, 3} for a, b in pairs)
 
@@ -73,7 +74,7 @@ def test_minhash_recall_vs_exact_jaccard(spark):
     gold = {(r["id_a"], r["id_b"])
             for r in ngram_jaccard_pairs(df, threshold=0.5).collect()}
     got = {(r["id_a"], r["id_b"])
-           for r in minhash_lsh_pairs(df, threshold=0.5).collect()}
+           for r in minhash_verified_pairs(df, threshold=0.5).collect()}
     assert gold, "ground truth must be non-empty"
     recall = len(gold & got) / len(gold)
     assert recall >= 0.9, f"LSH recall {recall:.2f} < 0.9 ({len(gold)} gold)"
@@ -165,19 +166,19 @@ def _planted_corpus(spark, n: int = 20):
     return spark.createDataFrame(docs, "doc_id long, text string")
 
 
-def test_minhash_verified_pairs_exhaustive_equals_exact_jaccard(spark):
+@pytest.mark.parametrize("n", [3, 5])
+def test_minhash_verified_pairs_exhaustive_equals_exact_jaccard(spark, n):
     """minhash_verified_pairs at bands=k (1-row banding + exact verify —
     the contract row's recall-proof configuration) must return EXACTLY the
     exact-Jaccard pair relation: candidate recall at k=64 single-hash
     bands is 1-(1-j)^64 (~1 at any j >= 0.3), and the verification step
-    recomputes the true Jaccard."""
-    from ecokg_spark.operators.dedup import minhash_verified_pairs
-
+    recomputes the true Jaccard. Over n in {3, 5}: the minhashes must
+    sign the same n-shingle sets the verify step compares."""
     df = _planted_corpus(spark)
     gold = {(r["id_a"], r["id_b"]): round(r["jaccard"], 9)
-            for r in ngram_jaccard_pairs(df, threshold=0.4).collect()}
+            for r in ngram_jaccard_pairs(df, n=n, threshold=0.4).collect()}
     got = {(r["id_a"], r["id_b"]): round(r["jaccard"], 9)
-           for r in minhash_verified_pairs(df, threshold=0.4,
+           for r in minhash_verified_pairs(df, threshold=0.4, n=n,
                                            bands=64).collect()}
     assert gold and got == gold
 
@@ -187,8 +188,6 @@ def test_minhash_verified_pairs_banded_default_recall_and_exactness(spark):
     VERDICT r3 reshape) is probabilistic only in recall: every emitted
     pair must carry the exact Jaccard (a subset of the gold relation),
     and recall on planted high-j near-dups must stay >= 0.9."""
-    from ecokg_spark.operators.dedup import minhash_verified_pairs
-
     df = _planted_corpus(spark, n=30)
     gold = {(r["id_a"], r["id_b"]): round(r["jaccard"], 9)
             for r in ngram_jaccard_pairs(df, threshold=0.5).collect()}
@@ -237,14 +236,12 @@ def test_minhash_banded_portable_matches_exact_on_planted(spark):
     """The portable md5 banded funnel (contract row minhash_banded) finds
     the planted near-dups with the exact Jaccard values — every output
     pair must agree with the exact n-gram relation."""
-    from ecokg_spark.operators.dedup import minhash_banded_portable_pairs
-
     df = _planted_corpus(spark, n=10)
     gold = {(r["id_a"], r["id_b"]): round(r["jaccard"], 9)
             for r in ngram_jaccard_pairs(df, threshold=0.5).collect()}
     got = {(r["id_a"], r["id_b"]): round(r["jaccard"], 9)
-           for r in minhash_banded_portable_pairs(
-               df, threshold=0.5).collect()}
+           for r in minhash_verified_pairs(
+               df, threshold=0.5, k=16, bands=4, portable=True).collect()}
     assert got and set(got) <= set(gold)
     assert all(gold[p] == j for p, j in got.items())
     # every planted sibling pair (j ~ 0.92; band-hit prob 1-(1-j^4)^4 ~
