@@ -7,9 +7,10 @@ from ecokg_spark.operators.extract import extract_text_udf
 from ecokg_spark.operators.linking import build_termlist, link_mentions
 from ecokg_spark.operators.merge import (dedup_first_wins, merge_edges,
                                          merge_nodes)
-from ecokg_spark.operators.stats import count_by_predicate, count_by_spo
+from ecokg_spark.operators.stats import (count_by_category, count_by_predicate,
+                                         count_by_spo, graph_summary)
 from ecokg_spark.operators.triples import extract_triple_udf
-from ecokg_spark.pipeline import build_kg
+from ecokg_spark.pipeline import apply_resolution, build_kg, quarantine_of
 from ecokg_spark.sources.pages import synth_pages
 from pyspark.sql import functions as F
 from ecokg_spark.contract._shared import (
@@ -29,13 +30,14 @@ from ecokg_spark.contract._shared import (
 
 
 def q_count_by_category(spark, sf):
-    """EP3 golden query shape: count rows by category column (documents)."""
+    """EP3 golden query shape (operators/stats.py count_by_category): count
+    rows by category, with the document language as the category."""
     d = t(spark, sf, "documents")
-    return d.groupBy("lang", "source").agg(F.count(F.lit(1)).cast("long").alias("n"))
+    return count_by_category(d.select(F.col("lang").alias("category")))
 
 
 SQL_COUNT_BY_CATEGORY = """
-SELECT lang, source, CAST(COUNT(*) AS BIGINT) AS n FROM documents GROUP BY lang, source
+SELECT lang AS category, CAST(COUNT(*) AS BIGINT) AS n FROM documents GROUP BY lang
 """
 
 
@@ -59,19 +61,40 @@ GROUP BY o_orderpriority
 
 
 def q_anti_join(spark, sf):
-    """Quarantine shape: customers with no orders (anti-join), per nation."""
+    """Quarantine shape (pipeline.apply_resolution + quarantine_of): order
+    triples mention their customer as subject and the next customer key as
+    object; the resolution table holds the BUILDING segment's customers, so
+    a mention of any other customer is quarantined in its role."""
     o, c = t(spark, sf, "orders"), t(spark, sf, "customer")
-    return (
-        c.join(o.select("o_custkey"), c["c_custkey"] == o["o_custkey"], "left_anti")
-        .groupBy("c_nationkey")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_customers"))
+    triples = o.select(
+        F.col("o_orderkey").cast("string").alias("url"),
+        F.lit(0).alias("sent_id"),
+        F.col("o_custkey").cast("string").alias("subj_mention"),
+        (F.col("o_custkey") + 1).cast("string").alias("obj_mention"),
     )
+    res = c.where(F.col("c_mktsegment") == "BUILDING").select(
+        F.col("c_custkey").cast("string").alias("mention"),
+        make_curie("C", "c_custkey").alias("curie"),
+        F.lit("exact").alias("match_kind"),
+    )
+    return quarantine_of(apply_resolution(triples, res))
 
 
 SQL_ANTI_JOIN = """
-SELECT c_nationkey, CAST(COUNT(*) AS BIGINT) AS n_customers FROM customer
-WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-GROUP BY c_nationkey
+WITH tr AS (
+  SELECT CAST(o_orderkey AS VARCHAR) AS url, 0 AS sent_id,
+         CAST(o_custkey AS VARCHAR) AS subj_mention,
+         CAST(o_custkey + 1 AS VARCHAR) AS obj_mention
+  FROM orders
+), res AS (
+  SELECT CAST(c_custkey AS VARCHAR) AS mention FROM customer
+  WHERE c_mktsegment = 'BUILDING'
+)
+SELECT url, sent_id, subj_mention AS mention, 'subject' AS role FROM tr
+WHERE NOT EXISTS (SELECT 1 FROM res WHERE res.mention = tr.subj_mention)
+UNION ALL
+SELECT url, sent_id, obj_mention AS mention, 'object' AS role FROM tr
+WHERE NOT EXISTS (SELECT 1 FROM res WHERE res.mention = tr.obj_mention)
 """
 
 
@@ -116,25 +139,47 @@ SELECT split_part(id, ':', 1) AS prefix, CAST(COUNT(*) AS BIGINT) AS n FROM (
 
 
 def q_rollup_stats(spark, sf):
-    """A3 stats consolidation via ROLLUP (grouping-sets family): order
-    counts by (status, priority) with subtotals and grand total."""
-    o = t(spark, sf, "orders")
-    return (
-        o.rollup("o_orderstatus", "o_orderpriority")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .select(
-            F.coalesce("o_orderstatus", F.lit("ALL")).alias("status"),
-            F.coalesce("o_orderpriority", F.lit("ALL")).alias("priority"),
-            "n",
-        )
+    """A3 stats consolidation (operators/stats.py graph_summary, the
+    merged-kg_stats.yaml source): an orders graph with one customer->order
+    edge per order (predicate = priority), order nodes categorized by
+    status and customer nodes uncategorized (the NULL facet reads ''). The
+    summary dict is flattened to (facet, key, n) rows; totals have a NULL
+    key."""
+    o, c = t(spark, sf, "orders"), t(spark, sf, "customer")
+    nodes = o.select(
+        make_curie("O", "o_orderkey").alias("id"),
+        F.col("o_orderstatus").alias("category"),
+    ).unionByName(c.select(
+        make_curie("C", "c_custkey").alias("id"),
+        F.lit(None).cast("string").alias("category"),
+    ))
+    edges = o.select(
+        make_curie("C", "o_custkey").alias("subject"),
+        F.col("o_orderpriority").alias("predicate"),
+        make_curie("O", "o_orderkey").alias("object"),
     )
+    s = graph_summary(nodes, edges)
+    rows = [(k, None, s[k]) for k in ("total_nodes", "total_edges")] + [
+        (facet, key, n) for facet in ("count_by_predicate", "count_by_category")
+        for key, n in s[facet].items()]
+    return spark.createDataFrame(rows, "facet string, key string, n long")
 
 
 SQL_ROLLUP_STATS = """
-SELECT COALESCE(o_orderstatus, 'ALL') AS status,
-       COALESCE(o_orderpriority, 'ALL') AS priority,
-       CAST(COUNT(*) AS BIGINT) AS n
-FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
+WITH nodes AS (
+  SELECT o_orderstatus AS category FROM orders
+  UNION ALL SELECT CAST(NULL AS VARCHAR) FROM customer
+)
+SELECT 'total_nodes' AS facet, CAST(NULL AS VARCHAR) AS key,
+       CAST(COUNT(*) AS BIGINT) AS n FROM nodes
+UNION ALL
+SELECT 'total_edges', NULL, CAST(COUNT(*) AS BIGINT) FROM orders
+UNION ALL
+SELECT 'count_by_predicate', o_orderpriority, CAST(COUNT(*) AS BIGINT)
+FROM orders GROUP BY o_orderpriority
+UNION ALL
+SELECT 'count_by_category', COALESCE(category, ''), CAST(COUNT(*) AS BIGINT)
+FROM nodes GROUP BY COALESCE(category, '')
 """
 
 

@@ -7,20 +7,24 @@ from ecokg_spark.contract._shared import t
 
 
 def q_sparql_sink_error(spark, sf):
-    """S17 SPARQL-result sink semantics: missing binding -> literal 'ERROR'
-    (query.py:20-36) == coalesce(col, 'ERROR') over a left join."""
-    n, r = t(spark, sf, "nation"), t(spark, sf, "region")
-    half = r.where(F.col("r_regionkey") % 2 == 0).select("r_regionkey", "r_name")
-    return (
-        n.join(half, n["n_regionkey"] == half["r_regionkey"], "left")
-        .select("n_name", F.coalesce("r_name", F.lit("ERROR")).alias("region_binding"))
-    )
+    """S17 SPARQL-result sink (query.py sink_bindings): an OPTIONAL that
+    binds ?m only for size-5 parts, written the TSV way — every binding a
+    string, an unbound one the literal 'ERROR'."""
+    from ecokg_spark.query import sink_bindings, sparql_select
+
+    nodes, edges = _kg_tables_from_part(spark, sf)
+    return sink_bindings(sparql_select(
+        spark,
+        "SELECT ?x ?cat ?m WHERE { ?x biolink:category ?cat . "
+        'OPTIONAL { ?x biolink:has_size ?m . FILTER(?m = "SZ:5") } }',
+        nodes, edges,
+    ))
 
 
 SQL_SPARQL_SINK_ERROR = """
-SELECT n_name, COALESCE(r_name, 'ERROR') AS region_binding
-FROM nation LEFT JOIN (SELECT r_regionkey, r_name FROM region WHERE r_regionkey % 2 = 0) r
-  ON n_regionkey = r.r_regionkey
+SELECT 'P:' || CAST(p_partkey AS VARCHAR) AS x, p_brand AS cat,
+       CASE WHEN p_size = 5 THEN 'SZ:5' ELSE 'ERROR' END AS m
+FROM part
 """
 
 

@@ -198,7 +198,7 @@ def q_curate_stream(spark, sf):
 
 
 def q_dedup_stream(spark, sf):
-    """Watermarked streaming dedup (streaming/ingest.py
+    """Watermarked streaming dedup (streaming/merge_sink.py
     dedup_within_watermark -> dropDuplicatesWithinWatermark): every event
     row is fed TWICE (same micro-batch — the retry/at-least-once shape),
     three ascending-ts files; the drained append-mode output must equal
@@ -207,7 +207,7 @@ def q_dedup_stream(spark, sf):
     import os as _os
     import tempfile
 
-    from ecokg_spark.streaming.ingest import dedup_within_watermark
+    from ecokg_spark.streaming.merge_sink import dedup_within_watermark
 
     d = t(spark, sf, "events").select(
         "event_id", F.col("ts").cast("timestamp").alias("ts"), "user_id",

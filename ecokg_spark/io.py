@@ -13,6 +13,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 def _iceberg_available(spark: SparkSession) -> bool:
@@ -53,18 +54,6 @@ class TableIO:
             return self.spark.table(name)
         return self.spark.read.parquet(self._path(name))
 
-    def exists(self, name: str) -> bool:
-        """True once `name` holds data: the Iceberg table exists, or the
-        parquet directory carries `_SUCCESS` or a `.parquet` file (an
-        empty directory, e.g. a fresh mkdtemp handed to a streaming sink,
-        is no table yet)."""
-        if self.iceberg:
-            return self.spark.catalog.tableExists(name)
-        path = self._path(name)
-        return os.path.isfile(os.path.join(path, "_SUCCESS")) or (
-            os.path.isdir(path)
-            and any(f.endswith(".parquet") for f in os.listdir(path)))
-
     def committed(self, name: str) -> bool:
         """True once a write of `name` has fully committed: the table
         exists in the Iceberg catalog (createOrReplace is atomic), or the
@@ -83,26 +72,6 @@ class TableIO:
         if os.path.isdir(path):
             import shutil
             shutil.rmtree(path)
-
-    def write_bucketed(self, df: DataFrame, name: str, n_buckets: int,
-                       bucket_cols: list[str],
-                       sort_cols: list[str] | None = None,
-                       mode: str = "overwrite") -> None:
-        """Bucketed table write — the co-located-join primitive for the big
-        graph tables (north-rule partitioning: kg.edges bucketed by
-        subject). Joins/aggregations keyed on the bucket columns read the
-        table with NO exchange (each bucket is a pre-shuffled partition;
-        Iceberg's equivalent is `bucket(N, col)` partition transforms).
-        Requires a session catalog (saveAsTable), which both the in-memory
-        and Hive catalogs provide."""
-        self.spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
-        w = df.write.mode(mode).format("parquet").bucketBy(n_buckets, *bucket_cols)
-        if sort_cols:
-            w = w.sortBy(*sort_cols)
-        w.option("path", self._path(name)).saveAsTable(name.replace(".", "_"))
-
-    def read_bucketed(self, name: str) -> DataFrame:
-        return self.spark.table(name.replace(".", "_"))
 
     def merge_into(self, source: DataFrame, name: str, keys: list[str],
                    when_matched: str = "update") -> None:
@@ -123,14 +92,17 @@ class TableIO:
 
         Source rows are deduplicated on `keys` first (SQL MERGE errors on
         multi-matched sources); which duplicate survives is arbitrary, so
-        pre-aggregate upstream when the surviving row matters.
-        At scale the anti-join probes the existing table keyed on `keys`;
-        keep the target bucketed on the leading key (write_bucketed) so the
-        probe is exchange-free."""
+        pre-aggregate upstream when the surviving row matters. Keys match
+        null-safely on both backends (``<=>`` / ``eqNullSafe``): a NULL key
+        equals a NULL key, as in dropDuplicates.
+
+        The target counts as present only once a write of it committed
+        (``committed``); a directory without ``_SUCCESS``, such as an empty
+        mkdtemp handed to a streaming sink, is written from scratch."""
         if when_matched not in ("update", "ignore"):
             raise ValueError(f"when_matched={when_matched!r}")
         source = source.dropDuplicates(keys)
-        if not self.exists(name):
+        if not self.committed(name):
             self.write(source, name, mode="overwrite")
             return
         if self.iceberg:
@@ -146,11 +118,17 @@ class TableIO:
             return
         path = self._path(name)
         target = self.spark.read.parquet(path)
+
+        def absent_from(df: DataFrame, other: DataFrame) -> DataFrame:
+            o = other.select(*[F.col(k).alias(f"_k{i}")
+                               for i, k in enumerate(keys)])
+            on = [df[k].eqNullSafe(o[f"_k{i}"]) for i, k in enumerate(keys)]
+            return df.join(o, on, "left_anti")
+
         if when_matched == "ignore":
-            fresh = source.join(target.select(*keys), keys, "left_anti")
-            fresh.write.mode("append").parquet(path)
+            absent_from(source, target).write.mode("append").parquet(path)
             return
-        kept = target.join(source.select(*keys), keys, "left_anti")
+        kept = absent_from(target, source)
         merged = kept.unionByName(source.select(*target.columns))
         tmp = path + "__staging"
         merged.write.mode("overwrite").parquet(tmp)  # materializes BEFORE drop
@@ -182,69 +160,6 @@ class TableIO:
         w.json(out_dir)
 
 
-def read_zip_entries(spark: SparkSession, path: str,
-                     pattern: str | None = None) -> DataFrame:
-    """Zip-archive source (S12; reference `unzip_to_tempdir`,
-    utils/transform_utils.py:168-180 — gzip Spark reads natively, zip it
-    does not): binaryFile scan + an Arrow-batched decompressor.
-
-    Returns (archive, entry, content binary) — one row per zip member.
-    Each archive decompresses inside one task (zip's central directory is
-    per-file, so archive-level is the natural parallel unit; many archives
-    spread across the cluster via the binaryFile scan's partitioning).
-    `pattern` filters entry names with a Python fnmatch (e.g. '*.tsv').
-    """
-    import fnmatch
-    import io as _io
-    import zipfile
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    schema = T.StructType([
-        T.StructField("archive", T.StringType()),
-        T.StructField("entry", T.StringType()),
-        T.StructField("content", T.BinaryType()),
-    ])
-
-    def unzip(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            for _, row in pdf.iterrows():  # a handful of archives per batch
-                out: list[tuple[str, str, bytes]] = []
-                with zipfile.ZipFile(_io.BytesIO(row["content"])) as z:
-                    for name in z.namelist():
-                        if name.endswith("/"):
-                            continue
-                        if pattern and not fnmatch.fnmatch(name, pattern):
-                            continue
-                        out.append((row["path"], name, z.read(name)))
-                if out:
-                    yield pd.DataFrame(out, columns=["archive", "entry", "content"])
-
-    raw = spark.read.format("binaryFile").load(path).select("path", "content")
-    return raw.mapInPandas(unzip, schema)
-
-
-def read_zip_tsv(spark: SparkSession, path: str, cols: list[str],
-                 sep: str = "\t", pattern: str | None = None,
-                 comment: str | None = None) -> DataFrame:
-    """TSV rows out of zip members: decompress (read_zip_entries), split
-    lines/fields JVM-side. `comment` drops lines starting with that prefix
-    (the GAF '!' convention)."""
-    from pyspark.sql import functions as F
-
-    lines = read_zip_entries(spark, path, pattern=pattern).select(
-        F.explode(F.split(F.decode("content", "UTF-8"), "\r?\n")).alias("line")
-    ).where(F.col("line") != "")
-    if comment:
-        lines = lines.where(~F.col("line").startswith(comment))
-    parts = F.split("line", sep)
-    return lines.select(
-        *[parts.getItem(i).alias(c) for i, c in enumerate(cols)]
-    )
-
-
 def parse_timestamp_multi(col, formats: list[str] | None = None):
     """Multi-format timestamp ingestion: try each format in order with
     try_to_timestamp (NULL on mismatch, never ANSI errors), first match
@@ -256,8 +171,6 @@ def parse_timestamp_multi(col, formats: list[str] | None = None):
     Pure Catalyst coalesce chain — one projection, no UDF; at corpus
     scale this rides the scan like any other conversion.
     """
-    from pyspark.sql import functions as F
-
     fmts = formats or [
         "yyyy-MM-dd HH:mm:ss", "yyyy-MM-dd'T'HH:mm:ss",
         "yyyy-MM-dd", "MM/dd/yyyy HH:mm", "MM/dd/yyyy",

@@ -221,23 +221,6 @@ def minhash_verified_pairs(
     return _verify(cand, id_col, threshold, sets)
 
 
-def minhash_candidate_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
-    k: int = MINHASH_K,
-    bands: int = BANDS,
-) -> DataFrame:
-    """Candidate (id_a, id_b) pairs exactly as minhash_verified_pairs
-    generates them (at its default n=3, xxhash64) BEFORE exact
-    verification — also exposed standalone for candidate-volume plan
-    tests (the 100-TB scale property lives in this stage's row count, not
-    the verified output)."""
-    return _candidates(_shingle_sets(df, text_col, id_col, 3), id_col,
-                       threshold, k, bands, "xxhash64")
-
-
 def incremental_dedup(
     new_docs: DataFrame,
     corpus: DataFrame,

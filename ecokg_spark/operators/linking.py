@@ -199,23 +199,6 @@ def link_ambiguity(
     )
 
 
-def ner_postfilter(
-    hits: DataFrame,
-    token_col: str = "TokenizedTerm",
-    preferred_col: str = "PreferredTerm",
-    keep_cols: list[str] | None = None,
-) -> DataFrame:
-    """NER output post-filter (U3, utils/nlp_utils.py:117-129): keep rows
-    whose tokenized term equals the preferred term with any parenthesized
-    qualifier stripped, project, dedup."""
-    kept = hits.where(
-        F.col(token_col) == F.regexp_replace(F.col(preferred_col), r"\(.*\)", "")
-    )
-    if keep_cols:
-        kept = kept.select(*keep_cols)
-    return kept.dropDuplicates()
-
-
 def alias_identity_edges(termlist: DataFrame) -> DataFrame:
     """(curie_a, curie_b) same-entity edges: two curies sharing any surface
     form are the same real-world entity -> input to canonicalization."""

@@ -97,8 +97,7 @@ def diff_graphs(
     marker ('added' rows come from `new`, 'removed' from `old`).
     Duplicate keys within one side collapse (set semantics — a diff is
     about membership). At scale each anti-join is one shuffle on the key
-    columns; pre-bucketing both snapshots by the same key makes the diff
-    exchange-free (TableIO.write_bucketed)."""
+    columns."""
     keys = keys or ["subject", "predicate", "object"]
     o = old.select(*keys).distinct()
     n = new.select(*keys).distinct()

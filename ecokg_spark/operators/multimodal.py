@@ -237,22 +237,6 @@ def with_synth_image_payload(df: DataFrame, id_col: str = "media_id",
     return df.withColumn(out_col, gen(F.col(id_col)))
 
 
-def synth_media(spark, n: int = 100) -> DataFrame:
-    """Deterministic fake media table for tests: payload bytes derived from
-    the id (expression-only, distributed)."""
-    return spark.range(n).select(
-        F.col("id").alias("media_id"),
-        F.when(F.col("id") % 3 == 0, "image").when(F.col("id") % 3 == 1, "audio")
-        .otherwise("video").alias("kind"),
-        F.encode(
-            F.concat(F.lit("payload-"), F.col("id"), F.lit("-"),
-                     F.repeat(F.lit("x"), (F.col("id") % 50 + 1).cast("int"))),
-            "UTF-8",
-        ).alias("payload"),
-        (F.col("id") % 100 + 1).cast("int").alias("n_frames"),
-    )
-
-
 def audio_chunk_plan(
     df: DataFrame,
     id_col: str = "doc_id",

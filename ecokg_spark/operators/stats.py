@@ -1,16 +1,15 @@
 """Graph statistics — the reference's merged-kg_stats.yaml shape (A3) and
 its canonical query (count nodes by category, tests/test_query.py:33-36).
 
-All single-pass hash aggregations; the skewed degree stats use the salted
-two-phase path from operators.skew (has_phenotype is ~half the edge mass).
+All single-pass hash aggregations. has_phenotype carries about half the
+edge mass, and Spark's partial aggregation already folds a hot key
+map-side, so no count here needs salting.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ecokg_spark.operators.skew import salted_count
 
 
 def count_by_predicate(edges: DataFrame) -> DataFrame:
@@ -38,11 +37,6 @@ def count_by_spo(edges: DataFrame, nodes: DataFrame) -> DataFrame:
         .groupBy("subject_category", "predicate", "object_category")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
     )
-
-
-def node_degree(edges: DataFrame) -> DataFrame:
-    """Out-degree per subject — hot-key skewed, hence salted two-phase."""
-    return salted_count(edges, ["subject"], out_col="degree")
 
 
 # stats facets are human-readable YAML blocks keyed by schema-bounded enums

@@ -146,8 +146,7 @@ the same queries compile straight to Catalyst plans — no endpoint:
     - COUNT + GROUP BY map to groupBy().agg(count).
 
 Bindings come back as a DataFrame whose columns are the SELECT variables
-(no '?'), ready for the reference's TSV sink shape (S17's ERROR-coalesce
-is contract.q_sparql_sink_error).
+(no '?'); sink_bindings gives them the reference's TSV sink shape (S17).
 """
 
 from __future__ import annotations
@@ -1194,6 +1193,15 @@ def _select_impl(query: str, nodes: DataFrame,
     if limit is not None:
         out = out.limit(limit)
     return out
+
+
+def sink_bindings(bindings: DataFrame) -> DataFrame:
+    """The reference's TSV sink rule (S17, eco-kg query.py:20-36): every
+    binding is written as a string and an unbound one as the literal
+    'ERROR'."""
+    return bindings.select(*[
+        F.coalesce(F.col(c).cast("string"), F.lit("ERROR")).alias(c)
+        for c in bindings.columns])
 
 
 def sparql_ask(

@@ -1,13 +1,11 @@
-"""Incremental KG merge sink: stream micro-batches upsert into the
-running merged edge/node tables via foreachBatch.
+"""Incremental merge sinks: foreachBatch bodies that fold stream
+micro-batches into a running table.
 
-Completes the streaming story (fused ingest -> stateful ops -> HERE):
-each micro-batch of new edges is deduplicated against the table built so
-far — the streaming equivalent of the batch (s,p,o) merge aggregate
-(operators/merge.py), with exactly-once delivery from the sink
-checkpoint + idempotent insert-only upserts. Both upsert bodies go
-through the one upsert path, TableIO.merge_into(..., when_matched="ignore"),
-whose parquet form is anti-join-then-append:
+Each micro-batch is deduplicated against the table built so far, with
+exactly-once delivery from the sink checkpoint + idempotent insert-only
+upserts. The first-wins upsert goes through the one upsert path,
+TableIO.merge_into(..., when_matched="ignore"), whose parquet form is
+anti-join-then-append:
 
   batch_n: new = batch.dropDuplicates(keys) ANTI-JOIN existing(keys)
            append(new)
@@ -17,9 +15,8 @@ anti-join against a table that already contains its rows, appending
 nothing — idempotence without a transactional store. With an Iceberg
 catalog merge_into runs the same upsert as a real MERGE INTO.
 
-At scale the anti-join's build side is the EXISTING table keyed by
-(s,p,o); bucket the table by subject (TableIO.write_bucketed) to keep the
-probe co-located and exchange-free.
+dedup_within_watermark is the bounded-state complement: it drops
+duplicates inside the stream itself, before any sink.
 """
 
 from __future__ import annotations
@@ -32,8 +29,6 @@ from pyspark.sql import functions as F
 from ecokg_spark.io import TableIO
 from ecokg_spark.operators.merge import dedup_first_wins
 
-EDGE_KEYS = ["subject", "predicate", "object"]
-
 
 def _table(spark, table_path: str) -> tuple[TableIO, str]:
     """(TableIO, name) addressing the sink's directory: its parent is the
@@ -44,13 +39,6 @@ def _table(spark, table_path: str) -> tuple[TableIO, str]:
     return TableIO(spark, warehouse), name
 
 
-def upsert_edges_batch(batch: DataFrame, table_path: str,
-                       keys: list[str] | None = None) -> None:
-    """foreachBatch body: append only (key-)new rows to `table_path`."""
-    io, name = _table(batch.sparkSession, table_path)
-    io.merge_into(batch, name, keys or EDGE_KEYS, when_matched="ignore")
-
-
 def upsert_first_wins_batch(batch: DataFrame, table_path: str,
                             key: str, order_col: str) -> None:
     """foreachBatch body: DETERMINISTIC first-wins upsert — keep the
@@ -59,26 +47,11 @@ def upsert_first_wins_batch(batch: DataFrame, table_path: str,
     (a file source fed id-sorted files), the drained table holds exactly
     the GLOBAL order_col-min row per key — the streaming equivalent of
     the batch exact-dedup aggregate (operators/dedup.py exact_dedup).
-    Same idempotence argument as upsert_edges_batch: a replayed batch
-    anti-joins against a table that already has its keys."""
+    A replayed batch anti-joins against a table that already has its
+    keys, so it appends nothing."""
     io, name = _table(batch.sparkSession, table_path)
     io.merge_into(dedup_first_wins(batch, [key], order_col), name, [key],
                   when_matched="ignore")
-
-
-def incremental_edge_merge(edge_stream: DataFrame, table_path: str,
-                           checkpoint: str, timeout_s: int | None = None):
-    """Drive an edge stream into a continuously merged table."""
-    q = (
-        edge_stream.writeStream.foreachBatch(
-            lambda batch, _epoch: upsert_edges_batch(batch, table_path)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_s)
-    return q
 
 
 def merge_hll_registers_batch(batch: DataFrame, table_path: str,
@@ -103,7 +76,7 @@ def merge_hll_registers_batch(batch: DataFrame, table_path: str,
     gcols = list(group_cols or [])
     regs = hll_registers(batch, value_col, p=p, group_cols=gcols)
     io, name = _table(batch.sparkSession, table_path)
-    if io.exists(name):
+    if io.committed(name):
         regs = (regs.unionByName(io.read(name))
                 .groupBy(*gcols, "bucket")
                 .agg(F.max("register").alias("register")))
@@ -112,3 +85,26 @@ def merge_hll_registers_batch(batch: DataFrame, table_path: str,
     if os.path.isdir(table_path):
         shutil.rmtree(table_path)
     os.rename(tmp, table_path)
+
+
+def dedup_within_watermark(
+    stream: DataFrame,
+    keys: list[str],
+    ts_col: str,
+    delay: str = "1 hour",
+) -> DataFrame:
+    """Watermarked streaming deduplication: emit the FIRST row per key,
+    with the dedup state EVICTED once the event-time watermark passes
+    key-arrival + `delay` — Spark's dropDuplicatesWithinWatermark.
+
+    This is the scale-complement of the foreachBatch first-wins merge
+    sink (upsert_first_wins_batch above): the sink form keeps the
+    whole merged table as its dedup set (exact forever, unbounded probe),
+    while this form bounds state to the watermark horizon — the right
+    shape for infinite streams where duplicates arrive close together
+    (retries, at-least-once upstream delivery). A duplicate arriving
+    AFTER eviction passes through again; choose `delay` >= the upstream
+    redelivery horizon.
+    """
+    return stream.withWatermark(ts_col, delay).dropDuplicatesWithinWatermark(
+        keys)

@@ -118,11 +118,3 @@ def read_obograph(spark, path: str, source_name: str | None = None
     name = source_name or os.path.basename(path).split(".")[0]
     raw = spark.read.option("multiLine", True).json(path)
     return ontology_to_kgx(raw, source_name=name)
-
-
-def termlist_from_ontology(nodes: DataFrame) -> DataFrame:
-    """Ontology nodes -> termlist-builder input shape (curie, name,
-    synonym, category, provided_by) — the U1 synonym-explode consumer."""
-    return nodes.select(
-        F.col("id").alias("curie"), "name", "synonym", "category", "provided_by"
-    )

@@ -129,9 +129,7 @@ def cmd_merge(args) -> None:
 
 def cmd_query(args) -> None:
     spark = _spark()
-    from pyspark.sql import functions as F
-
-    from ecokg_spark.query import sparql_select
+    from ecokg_spark.query import sink_bindings, sparql_select
 
     def read_any(path):
         if os.path.isdir(path) and any(
@@ -140,11 +138,8 @@ def cmd_query(args) -> None:
             return spark.read.parquet(path)
         return spark.read.option("sep", "\t").option("header", True).csv(path)
 
-    out = sparql_select(spark, args.sparql, read_any(args.nodes),
-                        read_any(args.edges))
-    # S17 sink semantics (query.py:20-36): missing binding -> 'ERROR'
-    out = out.select(*[F.coalesce(F.col(c).cast("string"), F.lit("ERROR")).alias(c)
-                       for c in out.columns])
+    out = sink_bindings(sparql_select(spark, args.sparql, read_any(args.nodes),
+                                      read_any(args.edges)))
     (out.coalesce(1).write.mode("overwrite")
         .option("sep", "\t").option("header", True).csv(args.output))
     print(f"query -> {args.output}")

@@ -101,7 +101,7 @@ def test_crash_between_data_write_and_commit(spark, io, clean, stage):
         StageRunner(crashing, run_id="t1").run_stages(_dag(spark))
     assert err.value.stage == stage
     # the data landed, but the stage is not committed
-    assert io.exists(f"kg.{stage}") and not StageRunner(io, "x").committed(stage)
+    assert io.committed(f"kg.{stage}") and not StageRunner(io, "x").committed(stage)
     r = StageRunner(io, run_id="t2")
     r.run_stages(_dag(spark))
     assert set(r.timings) == DOWNSTREAM[stage]
@@ -144,7 +144,7 @@ def test_transient_stage_is_no_table_and_runs_only_when_read(spark, io, clean):
     r = StageRunner(io, run_id="t1")
     r.run_stages(stages, transient={"b"})
     assert set(r.timings) == {"a", "c", "d"} and calls == ["b"]
-    assert not io.exists("kg.b") and not r.committed("b")
+    assert not io.committed("kg.b") and not r.committed("b")
     assert sorted(map(tuple, io.read("kg.d").collect())) == clean["d"]
     # committed readers: b never runs
     r = StageRunner(io, run_id="t2")

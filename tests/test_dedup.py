@@ -206,7 +206,7 @@ def test_minhash_banded_candidate_volume_drops_vs_exhaustive(spark):
     smaller than the exhaustive 1-row-per-band candidate set (which
     surfaces a pair whenever ANY of the 64 minhashes agree — the measured
     496k-candidates-from-5k-docs shape this replaces)."""
-    from ecokg_spark.operators.dedup import minhash_candidate_pairs
+    from ecokg_spark.operators.dedup import _candidates, _shingle_sets
 
     # the real-web-text shape that blows up 1-row banding: every page
     # shares boilerplate (nav/footer) shingles with every other page
@@ -224,8 +224,9 @@ def test_minhash_banded_candidate_volume_drops_vs_exhaustive(spark):
     # threshold=0.0 disables the exhaustive path's agreement prefilter, so
     # both counts are the raw bucket-join candidate volume — the quantity
     # that squares at corpus scale (the measured 496k-from-5k-docs shape)
-    n_exhaustive = minhash_candidate_pairs(df, threshold=0.0, bands=64).count()
-    n_banded = minhash_candidate_pairs(df, threshold=0.0, bands=16).count()
+    sets = _shingle_sets(df, "text", "doc_id", 3)
+    n_exhaustive = _candidates(sets, "doc_id", 0.0, 64, 64, "xxhash64").count()
+    n_banded = _candidates(sets, "doc_id", 0.0, 64, 16, "xxhash64").count()
     assert n_banded >= 30  # every planted near-dup pair must surface
     assert n_exhaustive > 10 * n_banded, (
         f"banded candidates {n_banded} not >10x below exhaustive "

@@ -96,24 +96,6 @@ def test_alias_identity_edges(spark):
     assert all(u < v for u, v in edges)
 
 
-def test_ner_postfilter(spark):
-    """U3 semantics (nlp_utils.py:117-129): tokenized == preferred with
-    '(...)' stripped; projection + dedup."""
-    from ecokg_spark.operators.linking import ner_postfilter
-
-    df = spark.createDataFrame(
-        [
-            ("tomato", "tomato(fruit)", "TAX:1"),
-            ("tomato", "tomato(fruit)", "TAX:1"),   # dup -> collapsed
-            ("tomato", "tomato", "TAX:1"),
-            ("tomatoes", "tomato(fruit)", "TAX:1"),  # mismatch -> dropped
-        ],
-        "TokenizedTerm string, PreferredTerm string, CURIE string",
-    )
-    out = ner_postfilter(df, keep_cols=["TokenizedTerm", "CURIE"])
-    assert [tuple(r) for r in out.collect()] == [("tomato", "TAX:1")]
-
-
 def test_link_ambiguity_counts_ties(spark):
     """Mentions equidistant to two curies must surface n_candidates=2 at
     the min distance; exact matches show (0, 1); unresolvable mentions

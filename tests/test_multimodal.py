@@ -3,14 +3,30 @@
 import hashlib
 
 import pytest
+from pyspark.sql import functions as F
 
 from ecokg_spark.operators.multimodal import (
     decode_image_real,
     decode_image_stub,
     extract_media_meta,
     frame_sample_plan,
-    synth_media,
 )
+
+
+def synth_media(spark, n: int = 100):
+    """Deterministic fake media table: payload bytes derived from the id
+    (expression-only, distributed)."""
+    return spark.range(n).select(
+        F.col("id").alias("media_id"),
+        F.when(F.col("id") % 3 == 0, "image").when(F.col("id") % 3 == 1, "audio")
+        .otherwise("video").alias("kind"),
+        F.encode(
+            F.concat(F.lit("payload-"), F.col("id"), F.lit("-"),
+                     F.repeat(F.lit("x"), (F.col("id") % 50 + 1).cast("int"))),
+            "UTF-8",
+        ).alias("payload"),
+        (F.col("id") % 100 + 1).cast("int").alias("n_frames"),
+    )
 
 
 def test_media_meta(spark):
@@ -83,7 +99,7 @@ def test_decode_image_real_headers():
 
 def test_byte_features_matches_numpy(spark):
     import numpy as np
-    from ecokg_spark.operators.multimodal import byte_features, synth_media
+    from ecokg_spark.operators.multimodal import byte_features
 
     media = synth_media(spark, 20)
     got = {r["media_id"]: r for r in byte_features(media).collect()}

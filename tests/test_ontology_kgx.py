@@ -7,10 +7,7 @@ import json
 from pyspark.sql import functions as F
 
 from ecokg_spark.operators.linking import build_termlist
-from ecokg_spark.transforms.ontology_kgx import (
-    read_obograph,
-    termlist_from_ontology,
-)
+from ecokg_spark.transforms.ontology_kgx import read_obograph
 
 OBO = "http://purl.obolibrary.org/obo/"
 
@@ -82,7 +79,9 @@ def test_ontology_feeds_termlist(spark, tmp_path):
     """U1 integration: ontology synonyms explode into linkable surface
     forms (biohub_converter.py:58-63 '|'-split semantics)."""
     nodes, _ = read_obograph(spark, _write(tmp_path))
-    tl = build_termlist(termlist_from_ontology(nodes))
+    tl = build_termlist(nodes.select(
+        F.col("id").alias("curie"), "name", "synonym", "category",
+        "provided_by"))
     terms = {(r["curie"], r["term_norm"]) for r in tl.collect()}
     assert ("TO:0000433", "drought tolerance") in terms
     assert ("TO:0000433", "drought resistance") in terms

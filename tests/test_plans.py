@@ -2,6 +2,8 @@
 plan, not just hoped for (filters pushed to the scan, dims broadcast,
 UDF stages narrow)."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -90,48 +92,82 @@ def test_corpus_side_edges_single_exchange(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_two_phase_salted_degree(spark):
-    """Degree count must be two-phase: partial per (key, salt), final per
-    key — two exchanges max, no single hot-key reducer."""
-    from ecokg_spark.operators.stats import node_degree
+def test_count_by_predicate_partial_aggregate_below_single_exchange(spark):
+    """has_phenotype carries about half the edge mass. The predicate count
+    still needs no salting: a partial HashAggregate folds each hot key
+    map-side, below the count's one Exchange."""
     from ecokg_spark.contract._shared import t as load
+    from ecokg_spark.operators.stats import count_by_predicate
 
     o = load(spark, SF, "orders")
     edges = o.select(
         F.col("o_custkey").cast("string").alias("subject"),
-        F.lit("p").alias("predicate"), F.col("o_orderkey").cast("string").alias("object"),
+        F.when(F.col("o_orderkey") % 2 == 0, "biolink:has_phenotype")
+        .otherwise(F.col("o_orderpriority")).alias("predicate"),
+        F.col("o_orderkey").cast("string").alias("object"),
     )
-    df = node_degree(edges)
-    assert "HashAggregate" in physical_plan(df)
-    assert count_exchanges(df) == 2
+    df = count_by_predicate(edges)
+    assert count_exchanges(df) == 1, physical_plan(df)
+    tree = physical_plan(df).split("\n\n")[0]
+    ops = re.findall(r"(HashAggregate|Exchange)", tree)
+    # top-down: final aggregate, the exchange, then the partial aggregate
+    assert ops == ["HashAggregate", "Exchange", "HashAggregate"], tree
 
 
-def test_bucketed_edges_join_without_exchange(spark, tmp_path):
-    """write_bucketed(kg.edges, bucket=subject) -> a subject-keyed
-    self-join / aggregation reads pre-shuffled buckets: ZERO shuffle
-    exchanges on the bucketed side (the co-located-join primitive for the
-    production edge table; Iceberg bucket(N, subject) equivalent)."""
+def test_rp_bucket_spreads_non_negative_vectors(spark):
+    """rp_bucket scales plane components with pmod: on non-negative input
+    the sign bits still vary, so 4 planes occupy at least 8 of the 16
+    buckets (the % scaling put every vector in one bucket)."""
+    from ecokg_spark.operators.dedup import rp_bucket
+
+    vecs = spark.range(400).select(
+        F.transform(F.sequence(F.lit(0), F.lit(15)),
+                    lambda i: F.abs(F.xxhash64(F.col("id"), i) % 1000)
+                    .cast("double")).alias("v"))
+    n = vecs.select(rp_bucket(F.col("v"), 4, 0).alias("b")).distinct().count()
+    assert n >= 8
+
+
+def test_asof_join_single_exchange(spark):
+    """asof_join is one union plus one running window over the key: a
+    single Exchange, and the right payload fills as one struct."""
+    from ecokg_spark.contract._shared import t as load
+    from ecokg_spark.operators.temporal import asof_join
+
+    ev = load(spark, SF, "events")
+    markers = ev.where(F.col("event_id") % 10 == 0).select(
+        "user_id", "ts", F.col("event_id").alias("marker_id"))
+    df = asof_join(ev.select("event_id", "user_id", "ts"), markers,
+                   on=["user_id"], right_cols=["marker_id"])
+    plan = physical_plan(df)
+    assert count_exchanges(df) == 1, plan
+    assert "last(_p" in plan
+
+
+@pytest.mark.parametrize("when_matched", ["ignore", "update"])
+def test_merge_into_dedups_source_then_anti_joins(spark, tmp_path,
+                                                   monkeypatch, when_matched):
+    """The parquet merge_into writes the source deduplicated on its keys
+    and anti-joined with the target. The null-safe key match stays a hash
+    join, never a nested loop; the optimizer may push the anti-join below
+    the dedup aggregate, which is equivalent on the keys."""
     from ecokg_spark.io import TableIO
 
     io = TableIO(spark, warehouse=str(tmp_path / "wh"))
-    edges = spark.range(1000).select(
-        (F.col("id") % 97).cast("string").alias("subject"),
-        F.lit("p").alias("predicate"),
-        F.col("id").cast("string").alias("object"),
-    )
-    io.write_bucketed(edges, "kg.edges_b", 8, ["subject"])
-    t = io.read_bucketed("kg.edges_b")
-
-    # subject-keyed aggregation: no exchange at all
-    agg = t.groupBy("subject").count()
-    assert count_exchanges(agg) == 0, physical_plan(agg)
-
-    # subject-keyed self-join (2-hop shape): no shuffle exchange either side
-    a = t.alias("a")
-    b = t.select(F.col("subject").alias("s2"), F.col("object").alias("o2"))
-    j = a.join(b.hint("merge"), F.col("a.subject") == F.col("s2"))
-    assert count_exchanges(j) == 0, physical_plan(j)
-    assert j.count() > 0 and agg.count() == 97
+    schema = "subject string, predicate string, object string"
+    io.write(spark.createDataFrame([("A", "p", "B")], schema), "kg.e")
+    src = spark.createDataFrame([("A", "p", "B"), ("A", "p", "C"),
+                                 ("A", "p", "C")], schema)
+    written, cls = [], type(src)
+    write = cls.write
+    monkeypatch.setattr(cls, "write", property(
+        lambda df: written.append(df) or write.fget(df)))
+    io.merge_into(src, "kg.e", ["subject", "predicate", "object"],
+                  when_matched=when_matched)
+    tree = physical_plan(written[0]).split("\n\n")[0]
+    assert re.search(r"(BroadcastHash|SortMerge|ShuffledHash)Join LeftAnti",
+                     tree), tree
+    assert "NestedLoop" not in tree and "HashAggregate" in tree, tree
 
 
 def test_fused_pass_is_narrow(spark):

@@ -1,6 +1,6 @@
-"""Twenty-first batch of independent pure-Python cross-checks: the NER
-post-filter, alias identity edges, and the crawl-frontier composition
-(link-graph authority + canonical anti-join + per-host md5 cap)."""
+"""Twenty-first batch of independent pure-Python cross-checks: alias
+identity edges and the crawl-frontier composition (link-graph authority +
+canonical anti-join + per-host md5 cap)."""
 
 import hashlib
 import re
@@ -10,27 +10,6 @@ from hypothesis import strategies as st
 
 _S = dict(deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
-
-
-# ---------------------------------------------------------------------------
-# ner_postfilter — parenthesized-qualifier strip equality gate
-# ---------------------------------------------------------------------------
-
-_tok = st.sampled_from(["maize", "rice", "zea mays", "x"])
-_pref = st.sampled_from(["maize", "maize (corn)", "rice (Oryza) x",
-                         "zea mays", "(all) x", "rice"])
-
-
-@settings(max_examples=12, **_S)
-@given(st.lists(st.tuples(_tok, _pref), min_size=1, max_size=12))
-def test_ner_postfilter_matches_python_reference(spark, rows):
-    from ecokg_spark.operators.linking import ner_postfilter
-
-    df = spark.createDataFrame(rows, "TokenizedTerm string, PreferredTerm string")
-    got = {tuple(r) for r in ner_postfilter(df).collect()}
-    exp = {(t, p) for t, p in rows
-           if t == re.sub(r"\(.*\)", "", p)}
-    assert got == exp
 
 
 # ---------------------------------------------------------------------------

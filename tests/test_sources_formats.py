@@ -101,27 +101,6 @@ def test_obograph_json(spark, tmp_path):
         ("TO:0000433", "is_a", "TO:0000387")]
 
 
-def test_zip_source(spark, tmp_path):
-    """S12 zip decompress (transform_utils.py:168-180 unzip path): Spark has
-    no native zip codec -> binaryFile + Arrow-batched unzip operator."""
-    import zipfile
-
-    from ecokg_spark.io import read_zip_entries, read_zip_tsv
-
-    p = tmp_path / "bundle.zip"
-    with zipfile.ZipFile(p, "w") as z:
-        z.writestr("data/a.tsv", "!comment line\ng1\tx\ng2\ty\n")
-        z.writestr("data/b.tsv", "g3\tz\n")
-        z.writestr("readme.txt", "not data")
-    ents = {r["entry"] for r in read_zip_entries(spark, str(p)).collect()}
-    assert ents == {"data/a.tsv", "data/b.tsv", "readme.txt"}
-
-    rows = read_zip_tsv(spark, str(p), ["gene", "val"], pattern="*.tsv",
-                        comment="!")
-    got = {(r["gene"], r["val"]) for r in rows.collect()}
-    assert got == {("g1", "x"), ("g2", "y"), ("g3", "z")}
-
-
 def test_parse_timestamp_multi(spark):
     import datetime as dt
 

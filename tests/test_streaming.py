@@ -1,80 +1,5 @@
-"""Structured Streaming ingest: file-source pages stream through the same
-extraction stages; windowed page-rate agg."""
-
-import pytest
-
-from ecokg_spark.sources.pages import synth_pages
-from ecokg_spark.streaming.ingest import (
-    page_rate,
-    read_pages_stream,
-    run_stream_to_parquet,
-    streaming_triples,
-)
-
-
-@pytest.fixture(scope="module")
-def pages_dir(spark, tmp_path_factory):
-    d = tmp_path_factory.mktemp("stream") / "pages"
-    synth_pages(spark, 120).write.mode("overwrite").parquet(str(d))
-    return str(d)
-
-
-def test_stream_extract_matches_batch(spark, pages_dir, tmp_path):
-    from ecokg_spark.operators.extract import extract_pages
-    from ecokg_spark.operators.triples import extract_triples
-
-    stream = read_pages_stream(spark, pages_dir)
-    assert stream.isStreaming
-    out = str(tmp_path / "out")
-    ck = str(tmp_path / "ck")
-    run_stream_to_parquet(streaming_triples(stream), out, ck, timeout_s=120)
-    got = spark.read.parquet(out).count()
-    batch = extract_triples(extract_pages(spark.read.parquet(pages_dir))).count()
-    assert got == batch > 0
-
-
-def test_stream_fused_matches_batch(spark, pages_dir, tmp_path):
-    """The fused single-pass operator runs unchanged under Structured
-    Streaming; the drained stream's rows equal the batch fused output."""
-    from pyspark.sql import functions as F
-
-    from ecokg_spark.operators.fused import fused_extract_triples
-    from ecokg_spark.streaming.ingest import streaming_fused
-
-    stream = read_pages_stream(spark, pages_dir)
-    out = str(tmp_path / "fused")
-    ck = str(tmp_path / "fck")
-    run_stream_to_parquet(streaming_fused(stream), out, ck, timeout_s=120)
-    got = spark.read.parquet(out)
-    batch = fused_extract_triples(spark.read.parquet(pages_dir))
-    # audit + triple rows match exactly; combiner rows (sent_id=-2/-3) are
-    # batch-boundary-dependent by design, so compare their DISTINCT sets
-    for kinds, distinct in ((F.col("sent_id") >= -1, False),
-                            (F.col("sent_id") < -1, True)):
-        g, b = got.where(kinds), batch.where(kinds)
-        if distinct:
-            g, b = g.distinct(), b.distinct()
-        assert g.exceptAll(b).count() == 0
-        assert b.exceptAll(g).count() == 0
-
-
-def test_page_rate_window(spark, pages_dir, tmp_path):
-    stream = read_pages_stream(spark, pages_dir)
-    out = str(tmp_path / "rate")
-    ck = str(tmp_path / "rck")
-    q = (
-        page_rate(stream).writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", out)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    # append-mode windows only emit once the watermark passes; with a bounded
-    # historical corpus all windows close when the stream drains
-    rates = spark.read.parquet(out)
-    assert set(rates.columns) == {"window_start", "lang", "n_pages"}
+"""Structured Streaming operators and sinks: stateful sessions, the
+foreachBatch upsert sinks, watermarked dedup, windowed stream joins."""
 
 
 def test_stateful_streaming_sessions_match_batch(spark, tmp_path):
@@ -168,15 +93,14 @@ def test_stateful_streaming_sessions_match_batch(spark, tmp_path):
 
 
 def test_incremental_edge_merge(spark, tmp_path):
-    """foreachBatch upsert: overlapping micro-batches merge into a
-    deduplicated edge table equal to the batch (s,p,o)-distinct of the
-    full input; a replayed batch appends nothing (idempotence)."""
-    from pyspark.sql import functions as F
+    """foreachBatch upsert through TableIO.merge_into(when_matched=
+    "ignore"): overlapping micro-batches merge into a deduplicated edge
+    table equal to the batch (s,p,o)-distinct of the full input; a
+    replayed batch appends nothing (idempotence)."""
+    from ecokg_spark.io import TableIO
 
-    from ecokg_spark.streaming.merge_sink import (
-        incremental_edge_merge,
-        upsert_edges_batch,
-    )
+    io = TableIO(spark, str(tmp_path))
+    keys = ["subject", "predicate", "object"]
 
     src = str(tmp_path / "edges_src")
     rows1 = [("A", "p", "B"), ("A", "p", "C"), ("A", "p", "B")]
@@ -188,13 +112,18 @@ def test_incremental_edge_merge(spark, tmp_path):
     table = str(tmp_path / "merged")
     stream = (spark.readStream.schema(schema)
               .option("maxFilesPerTrigger", 1).parquet(src))
-    incremental_edge_merge(stream, table, str(tmp_path / "ck"), timeout_s=120)
+    (stream.writeStream
+     .foreachBatch(lambda batch, _e: io.merge_into(
+         batch, "merged", keys, when_matched="ignore"))
+     .option("checkpointLocation", str(tmp_path / "ck"))
+     .trigger(availableNow=True).start().awaitTermination(120))
 
     got = {tuple(r) for r in spark.read.parquet(table).collect()}
     assert got == {("A", "p", "B"), ("A", "p", "C"), ("B", "p", "C")}
 
     # replay batch 2 manually -> idempotent, nothing appended
-    upsert_edges_batch(spark.createDataFrame(rows2, schema), table)
+    io.merge_into(spark.createDataFrame(rows2, schema), "merged", keys,
+                  when_matched="ignore")
     assert spark.read.parquet(table).count() == 3
 
 
@@ -225,7 +154,7 @@ def test_dedup_within_watermark_suppresses_batch_dups(spark, tmp_path):
     equals the distinct input set (batch parity)."""
     from pyspark.sql import functions as F
 
-    from ecokg_spark.streaming.ingest import dedup_within_watermark
+    from ecokg_spark.streaming.merge_sink import dedup_within_watermark
 
     rows = [(i, f"2024-01-01 00:{i:02d}:00", i * 1.5) for i in range(30)]
     d = spark.createDataFrame(rows, "event_id long, ts string, value double") \
