@@ -11,9 +11,33 @@ with the reference's on-disk format (eco_kg writes nodes.tsv/edges.tsv via
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+
+# merge_into's parquet swap: the merged table is written beside the target
+# under _STAGED, the old target moves to _ASIDE, the staged table takes its
+# place, and the old one is dropped
+_STAGED, _ASIDE = "__staging", "__aside"
+
+
+def _finish_swap(path: str) -> None:
+    """Complete a merge_into swap a crash cut short. With the old table
+    aside and the target gone, the staged table (fully written before the
+    swap began) is renamed in, or, without one, the old table is moved
+    back; an old table left aside beside a target is dropped."""
+    aside = path + _ASIDE
+    if not os.path.isdir(aside):
+        return
+    if not os.path.isdir(path):
+        staged = path + _STAGED
+        ready = os.path.isfile(os.path.join(staged, "_SUCCESS"))
+        os.rename(staged if ready else aside, path)
+    if os.path.isdir(aside):
+        shutil.rmtree(aside)
 
 
 def _iceberg_available(spark: SparkSession) -> bool:
@@ -31,6 +55,9 @@ class TableIO:
         self.warehouse = warehouse or os.environ.get(
             "ECOKG_WAREHOUSE", "/tmp/ecokg_warehouse"
         )
+        # parquet table -> schema of the DataFrame this TableIO last wrote
+        # there whole; dropped by any other write, merge or drop of it
+        self._written: dict[str, StructType] = {}
 
     def _path(self, name: str) -> str:
         return os.path.join(self.warehouse, *name.split("."))
@@ -44,33 +71,45 @@ class TableIO:
             else:
                 w.createOrReplace()
             return
+        self._written.pop(name, None)
         writer = df.write.mode(mode)
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(self._path(name))
+        if mode == "overwrite" and not partition_by:
+            self._written[name] = df.schema
 
     def read(self, name: str) -> DataFrame:
+        """`name` as a DataFrame. On parquet, a table this TableIO wrote
+        whole (``write`` in overwrite mode, unpartitioned) reads back with
+        the schema of the DataFrame written, which skips schema inference
+        and its Spark job; any other table is inferred."""
         if self.iceberg:
             return self.spark.table(name)
-        return self.spark.read.parquet(self._path(name))
+        schema = self._written.get(name)
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(self._path(name))
 
     def committed(self, name: str) -> bool:
         """True once a write of `name` has fully committed: the table
         exists in the Iceberg catalog (createOrReplace is atomic), or the
         parquet directory carries the output committer's `_SUCCESS` file,
-        which lands only after every task's files are in place."""
+        which lands only after every task's files are in place. On parquet
+        it first finishes a merge_into swap that a crash cut short."""
         if self.iceberg:
             return self.spark.catalog.tableExists(name)
-        return os.path.isfile(os.path.join(self._path(name), "_SUCCESS"))
+        path = self._path(name)
+        _finish_swap(path)
+        return os.path.isfile(os.path.join(path, "_SUCCESS"))
 
     def drop(self, name: str) -> None:
         """Remove `name` if present; afterwards `committed(name)` is False."""
         if self.iceberg:
             self.spark.sql(f"DROP TABLE IF EXISTS {name}")
             return
+        self._written.pop(name, None)
         path = self._path(name)
         if os.path.isdir(path):
-            import shutil
             shutil.rmtree(path)
 
     def merge_into(self, source: DataFrame, name: str, keys: list[str],
@@ -85,8 +124,10 @@ class TableIO:
         (streaming/merge_sink.py) call it too.
 
         - ``when_matched="update"``: kept = target ANTI source(keys);
-          rewrite kept UNION source atomically (stage dir + rename — the
-          stage write materializes before the old path is dropped).
+          rewrite kept UNION source to a staged directory, then swap it in
+          by renames (old table aside, staged in, old dropped). A crash
+          mid-swap leaves the old or the merged table whole, and the next
+          ``committed`` (which merge_into calls) completes the swap.
         - ``when_matched="ignore"``: insert-only — append source ANTI
           target; no rewrite, so replays are idempotent (first write wins).
 
@@ -102,6 +143,7 @@ class TableIO:
         if when_matched not in ("update", "ignore"):
             raise ValueError(f"when_matched={when_matched!r}")
         source = source.dropDuplicates(keys)
+        self._written.pop(name, None)
         if not self.committed(name):
             self.write(source, name, mode="overwrite")
             return
@@ -130,11 +172,12 @@ class TableIO:
             return
         kept = absent_from(target, source)
         merged = kept.unionByName(source.select(*target.columns))
-        tmp = path + "__staging"
-        merged.write.mode("overwrite").parquet(tmp)  # materializes BEFORE drop
-        import shutil
-        shutil.rmtree(path)
-        os.rename(tmp, path)
+        merged.write.mode("overwrite").parquet(path + _STAGED)  # BEFORE the swap
+        # swap: old table aside, staged table in, old table dropped; a
+        # crash between any two steps leaves what _finish_swap completes
+        os.rename(path, path + _ASIDE)
+        os.rename(path + _STAGED, path)
+        shutil.rmtree(path + _ASIDE)
 
     def export_kgx_tsv(self, df: DataFrame, out_dir: str, compress: bool = True) -> None:
         """KGX-parity TSV export (reference: merge.yaml:66-71 tar.gz TSV dump;

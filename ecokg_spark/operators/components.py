@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ecokg_spark.session import local_frame
+
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
     rev = edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
@@ -66,10 +68,11 @@ def _edge_fingerprint(edges: DataFrame) -> int:
 SMALL_GRAPH_EDGES = 1_000_000
 
 
-def _unionfind_small(rows, spark) -> DataFrame:
+def unionfind_small(pairs) -> dict[str, str]:
     """Driver-side union-find for dimension-sized graphs (broadcast-style
-    small-side gate). Takes collected (u, v) rows; returns
-    (node, component=min node id in component)."""
+    small-side gate). Takes collected (u, v) pairs; returns
+    node -> component (min node id in its component) for every node that
+    appears in a pair."""
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:
@@ -80,18 +83,13 @@ def _unionfind_small(rows, spark) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for r in rows:
-        ru, rv = find(r["u"]), find(r["v"])
+    for u, v in pairs:
+        ru, rv = find(u), find(v)
+        parent.setdefault(u, u)
+        parent.setdefault(v, v)
         if ru != rv:
             parent[max(ru, rv)] = min(ru, rv)
-
-    members: dict[str, list[str]] = {}
-    for x in list(parent):
-        members.setdefault(find(x), []).append(x)
-    out = [(n, root) for root, ns in members.items() for n in [*ns, root]]
-    if not out:
-        return spark.createDataFrame([], "node string, component string")
-    return spark.createDataFrame(out, "node string, component string").distinct()
+    return {x: find(x) for x in parent}
 
 
 def connected_components(
@@ -108,7 +106,8 @@ def connected_components(
     # of the whole pipeline, see BENCH/BASELINE.md)
     sample = e.select("u", "v").take(small_graph_edges + 1)
     if len(sample) <= small_graph_edges:
-        return _unionfind_small(sample, e.sparkSession)
+        return local_frame(e.sparkSession, list(unionfind_small(sample).items()),
+                           "node string, component string")
     e = e.localCheckpoint(eager=True)
     prev_fp = _edge_fingerprint(e)
     for it in range(max_iter):

@@ -12,6 +12,10 @@ North-star stage 3. Two paths, both shuffle-lean:
           DISTINCT unmatched mention strings enter the fuzzy path, so its
           cost is bounded by surface-form cardinality, not corpus size.
 
+For a termlist already read to the driver (at most NL_FUZZY_MAX_TERMS
+rows), link_mentions_local applies the same rule with one nested-loop pass
+and no shuffle of its own.
+
 Termlist construction mirrors utils/biohub_converter.py:7-64: synonym
 explode on '|' (:58-63), category excludes (:38-46, biolink:Publication),
 drop empty names. Stopword filtering mirrors transform.py:76-83 semantics.
@@ -26,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ecokg_spark.operators.dedup import minhash_bands
+from ecokg_spark.session import local_frame
 
 EXCLUDE_CATEGORIES = ["biolink:Publication"]  # biohub_converter.py EXCLUDE
 
@@ -165,6 +170,50 @@ def link_mentions(
     )
     quarantine = miss.join(F.broadcast(best), "_norm", "left_anti")
     return hit.drop("_norm").unionByName(fuzzy_hit.drop("_norm")), quarantine.drop("_norm")
+
+
+def link_mentions_local(
+    mentions: DataFrame, terms: list, max_pairs: int
+) -> list[tuple] | None:
+    """link_mentions' linked side under fuzzy_strategy='nl', for a termlist
+    already on the driver: `terms` are its (curie, term_norm) rows and
+    `mentions` has DISTINCT values in col `mention`. Returns one (mention,
+    curie, match_kind) per linkable mention, or None when more than
+    `max_pairs` candidate pairs would come back.
+
+    The dim (term_norm -> min curie) becomes a local relation and ONE
+    broadcast nested-loop pass keeps the (mention, term) pairs within
+    MAX_EDIT_DISTANCE; normalization, the stopword filter and the edit
+    distance stay in Spark. Each mention then takes the least (distance,
+    curie, term_norm) of its pairs — link_mentions' min(struct(_d, curie,
+    term_norm)), NULL curie first as Spark orders it, and Python's string
+    order is Spark's (code points = UTF-8 bytes). A distance-0 pair is the
+    exact hit, so the exact join, the miss split and the per-mention
+    groupBy need no shuffle; a term whose curies are all NULL misses the
+    exact join there and links 'fuzzy' to NULL, as here."""
+    curies: dict[str, list] = {}
+    for curie, term in terms:
+        if term is not None:
+            curies.setdefault(term, []).append(curie)
+    dim = local_frame(mentions.sparkSession,
+                      [(t, min([c for c in cs if c is not None], default=None))
+                       for t, cs in curies.items()],
+                      "term_norm string, curie string")
+    m = mentions.select("mention", F.lower(F.trim("mention")).alias("_norm")).where(
+        ~F.col("_norm").isin(STOPWORDS))
+    d = F.levenshtein("_norm", "term_norm")
+    pairs = m.join(F.broadcast(dim), d <= MAX_EDIT_DISTANCE).select(
+        "mention", d.alias("_d"), "curie", "term_norm").take(max_pairs + 1)
+    if len(pairs) > max_pairs:
+        return None
+    best: dict[str, tuple] = {}
+    for mention, dist, curie, term in pairs:
+        key = (dist, curie is not None, curie or "", term)
+        if mention not in best or key < best[mention]:
+            best[mention] = key
+    return [(mention, curie if has_curie else None,
+             "exact" if dist == 0 and has_curie else "fuzzy")
+            for mention, (dist, has_curie, curie, _t) in best.items()]
 
 
 def link_ambiguity(

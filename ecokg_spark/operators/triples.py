@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from ecokg_spark.session import local_frame
 from ecokg_spark.sources.vocab import VERB_PHRASES, VERB_PREDICATES, VERB_RELATIONS
 
 # longest-first alternation so "has phenotype" wins over a bare "has";
@@ -69,7 +70,7 @@ def verb_map(spark) -> DataFrame:
     Biolink predicate + RO relation (F7-style conditional chain as a dim
     table, cf. planteome.py:562-608 Aspect dispatch)."""
     rows = list(zip(VERB_PHRASES, VERB_PREDICATES, VERB_RELATIONS))
-    return spark.createDataFrame(rows, "verb string, predicate string, relation string")
+    return local_frame(spark, rows, "verb string, predicate string, relation string")
 
 
 def extract_triples(extracted: DataFrame, lang: str = "en") -> DataFrame:

@@ -8,11 +8,16 @@ Shuffle budget of the whole plan (the thing that matters at 100 TB):
                             only materialized corpus-side artifact is the
                             small audit+triples relation — page text never
                             hits the block store or a shuffle
-  entity linking .......... exact+fuzzy resolution over DISTINCT surface
-                            forms only (vocabulary-bounded shuffles), then
+  entity linking .......... resolution over DISTINCT surface forms only:
+                            under the termlist gate, one bounded read of the
+                            termlist + one nested-loop pass whose candidate
+                            pairs are picked on the driver (no shuffle but
+                            the surface distinct), else the exact+fuzzy
+                            DAG's vocabulary-bounded shuffles; then
                             broadcast map-side application to the corpus —
                             zero corpus-sized shuffle
-  canonicalization ........ dimension-sized: driver union-find under the
+  canonicalization ........ dimension-sized: one bounded read of the
+                            termlist + driver union-find under the
                             broadcast-style size gate, else O(log n)
                             large-star/small-star rounds; corpus-independent,
                             so it runs CONCURRENTLY with the fused pass
@@ -32,7 +37,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ecokg_spark.operators.checkpoint import Stage, run_dag
-from ecokg_spark.operators.components import canonical_map
+from ecokg_spark.operators.components import (
+    SMALL_GRAPH_EDGES,
+    canonical_map,
+    unionfind_small,
+)
 from ecokg_spark.operators.extract import extract_pages
 from ecokg_spark.operators.fused import (
     AUDIT_SENT_ID,
@@ -41,47 +50,85 @@ from ecokg_spark.operators.fused import (
     fused_extract_triples,
 )
 from ecokg_spark.operators.linking import (
+    NL_FUZZY_MAX_TERMS,
     alias_identity_edges,
     build_termlist,
     link_mentions,
+    link_mentions_local,
 )
 from ecokg_spark.operators.merge import merge_edges, merge_nodes
 from ecokg_spark.operators.stats import count_by_category, count_by_predicate
 from ecokg_spark.operators.triples import verb_map
+from ecokg_spark.session import local_frame
 from ecokg_spark.sources.pages import alias_table, category_table
 
 
 # resolution tables at or under this many rows become driver-local
 # relations (broadcast-style size gate, same precedent as
-# components.SMALL_GRAPH_EDGES): every downstream broadcast build is then
-# free — no job, no checkpoint. ~30 MB of 3-string rows at the limit.
+# components.SMALL_GRAPH_EDGES); it also bounds the candidate pairs the
+# driver path collects. A LocalRelation holds its rows in the plan: reading
+# it starts no job and no checkpoint, though each broadcast join against it
+# still starts its own. ~30 MB of 3-string rows at the limit.
 RES_BROADCAST_MAX = 200_000
 
 # build_kg's in-memory policy checkpoints the stages several others read;
-# every other stage stays lazy and is computed by whoever reads it
-CHECKPOINTED = ("termlist", "fused", "canonical")
+# canonical and resolution materialize themselves through their size
+# gates, and every other stage stays lazy and is computed by whoever reads it
+CHECKPOINTED = ("termlist", "fused")
 
 
 def resolve_mentions(
     surfaces: DataFrame, termlist: DataFrame, dim_count: int | None = None
 ) -> DataFrame:
     """Surface forms (col `mention`) -> the resolution table (mention,
-    curie, match_kind), evaluated exactly once.
+    curie, match_kind), evaluated exactly once over the DISTINCT surfaces.
 
-    The exact+fuzzy DAG runs over the DISTINCT surfaces only
-    (vocabulary-bounded, not corpus-sized). Its result is referenced by
-    several broadcast builds downstream, so take(N+1) both evaluates it once
-    and gates its size: vocabulary-sized results become a driver-local
-    relation (every later broadcast builds with NO job), oversized ones fall
-    back to a checkpoint. `dim_count` is link_mentions' size-gate hint."""
+    take(NL_FUZZY_MAX_TERMS + 1) of the termlist's (curie, term_norm) is
+    the fuzzy gate: a termlist at or under it resolves through
+    linking.link_mentions_local (one nested-loop pass, its candidate pairs
+    collected under RES_BROADCAST_MAX) into a driver-local relation.
+    Otherwise the distributed exact+fuzzy DAG of link_mentions runs and
+    take(RES_BROADCAST_MAX + 1) evaluates its result once and gates its
+    size: a local relation under the bound, a checkpoint above.
+    `dim_count` is link_mentions' size-gate hint on that path (default: the
+    termlist rows taken)."""
+    spark = surfaces.sparkSession
+    distinct = surfaces.distinct()
+    terms = termlist.select("curie", "term_norm").take(NL_FUZZY_MAX_TERMS + 1)
+    if len(terms) <= NL_FUZZY_MAX_TERMS:
+        rows = link_mentions_local(distinct, terms, RES_BROADCAST_MAX)
+        if rows is not None:
+            return local_frame(spark, rows, "mention string, curie string, match_kind string")
     resolved, _unresolved = link_mentions(
-        surfaces.distinct(), termlist, "mention", dim_count=dim_count
-    )
+        distinct, termlist, "mention",
+        dim_count=len(terms) if dim_count is None else dim_count)
     res = resolved.select("mention", "curie", "match_kind")
     sample = res.take(RES_BROADCAST_MAX + 1)
     if len(sample) <= RES_BROADCAST_MAX:
-        return res.sparkSession.createDataFrame(sample, res.schema)
+        return local_frame(spark, sample, res.schema)
     return res.localCheckpoint(eager=True)
+
+
+def canonicalize(termlist: DataFrame) -> DataFrame:
+    """(node, canonical) for every termlist curie: curies that share a
+    term_norm are one entity, labelled by its min curie; an isolated curie
+    maps to itself (canonical_map over alias_identity_edges).
+
+    take(SMALL_GRAPH_EDGES + 1) of (curie, term_norm) is the gate: at or
+    under it, the curies sharing a term_norm are unioned on the driver
+    (components.unionfind_small) into a local relation. Above it the
+    distributed canonical_map runs and is checkpointed for its readers."""
+    rows = termlist.select("curie", "term_norm").take(SMALL_GRAPH_EDGES + 1)
+    if len(rows) > SMALL_GRAPH_EDGES:
+        return canonical_map(
+            alias_identity_edges(termlist),
+            termlist.select(F.col("curie").alias("node"))).localCheckpoint(eager=True)
+    first: dict[str, str] = {}  # term_norm -> its first curie
+    comp = unionfind_small([(first.setdefault(t, c), c) for c, t in rows
+                            if c is not None and t is not None])
+    return local_frame(termlist.sparkSession,
+                       [(c, comp.get(c, c)) for c in {c for c, _t in rows}],
+                       "node string, canonical string")
 
 
 def apply_resolution(triples: DataFrame, res: DataFrame) -> DataFrame:
@@ -173,11 +220,10 @@ def kg_stages(
 
     def resolution(fused: DataFrame, termlist: DataFrame) -> DataFrame:
         # linking's distinct-surfaces input: the fused pass's batch-combined
-        # mention rows (vocabulary-bounded), not a corpus-sized distinct;
-        # the termlist row count bounds the surface count for the fuzzy gate
+        # mention rows (vocabulary-bounded), not a corpus-sized distinct
         surfaces = fused.where(F.col("sent_id") == MENTION_SENT_ID).select(
             F.col("subj_mention").alias("mention"))
-        return resolve_mentions(surfaces, termlist, dim_count=termlist.count())
+        return resolve_mentions(surfaces, termlist)
 
     def edges(fused: DataFrame, res: DataFrame, canon: DataFrame) -> DataFrame:
         # candidates are the fused pass's batch-distinct (s, v, o) combiner
@@ -230,9 +276,7 @@ def kg_stages(
         ("audit", ("fused",), lambda fused: fused.where(
             F.col("sent_id") == AUDIT_SENT_ID).select("url", "text_sha256", "n_sentences")),
         ("triples", ("fused",), triples),
-        ("canonical", ("termlist",), lambda termlist: canonical_map(
-            alias_identity_edges(termlist),
-            termlist.select(F.col("curie").alias("node")))),
+        ("canonical", ("termlist",), canonicalize),
         ("resolution", ("fused", "termlist"), resolution),
         ("linked_raw", ("fused", "resolution"),
          lambda fused, res: apply_resolution(triples(fused), res)),
@@ -253,12 +297,12 @@ def build_kg(
     """Run the full pipeline in memory; returns every stage's output under
     its stage name, plus the lazy `extracted` parity view.
 
-    termlist, fused and canonical are materialized once for their many
-    readers: the fused pass as a PARQUET staged table under `scratch_dir`
-    when given (columnar: readers get column pruning + sent_id row-group
-    pushdown), else, like the other two, an in-memory localCheckpoint.
-    resolution materializes itself through its size gate; everything else
-    is lazy. job.run_kg_job runs the same stage list with one durable table
+    termlist and fused are materialized once for their many readers: the
+    fused pass as a PARQUET staged table under `scratch_dir` when given
+    (columnar: readers get column pruning + sent_id row-group pushdown),
+    else, like termlist, an in-memory localCheckpoint. canonical and
+    resolution materialize themselves through their size gates; everything
+    else is lazy. job.run_kg_job runs the same stage list with one durable table
     per stage."""
 
     def materialize(name: str, build) -> DataFrame:

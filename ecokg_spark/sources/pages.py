@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ecokg_spark.session import local_frame
 from ecokg_spark.sources.vocab import (
     CANONICAL,
     CATEGORIES,
@@ -264,10 +265,10 @@ def alias_table(spark: SparkSession) -> DataFrame:
         T.StructField("category", T.StringType(), False),
         T.StructField("provided_by", T.StringType(), False),
     ])
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def category_table(spark: SparkSession) -> DataFrame:
     """(curie, name, category) node dim for merged-graph node materialize."""
     rows = [(curie, name, cat) for (curie, name, _s, cat) in VOCAB]
-    return spark.createDataFrame(rows, "curie string, name string, category string")
+    return local_frame(spark, rows, "curie string, name string, category string")

@@ -3,6 +3,7 @@
 import os
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from ecokg_spark.io import TableIO
@@ -13,6 +14,9 @@ from ecokg_spark.sources.pages import synth_pages
 N = 200
 STAGES = ["termlist", "fused", "audit", "triples", "linked_raw", "quarantine",
           "canonical", "edges", "nodes", "stats_by_predicate", "stats_by_category"]
+
+
+FRESH_JOBS_DISTRIBUTED_DIMS = 73
 
 
 def _last_job_id(spark, group: str) -> int:
@@ -39,8 +43,13 @@ def test_job_runs_resumes_and_matches_pipeline(spark, tmp_path):
     pages = synth_pages(spark, N).localCheckpoint(eager=True)
     io = TableIO(spark, warehouse=wh)
 
+    before = _last_job_id(spark, "probe-fresh-before")
     r1 = run_kg_job(spark, pages, io, run_id="t1")
+    fresh_jobs = _last_job_id(spark, "probe-fresh-after") - before - 1
     assert set(r1.timings) == set(STAGES)
+    # a fresh run started 73 jobs while canonical and resolution ran as
+    # distributed DAGs and every commit read-back inferred its schema
+    assert fresh_jobs < FRESH_JOBS_DISTRIBUTED_DIMS, fresh_jobs
     n_edges = io.read("kg.edges").count()
     assert n_edges > 0
     # every stage table matches the in-memory pipeline's stage output exactly
@@ -104,3 +113,40 @@ def test_tableio_merge_into_upsert_and_insert_only(spark, tmp_path):
     io.merge_into(src, "kg.fresh", keys=["k"])
     assert {(r.k, r.v) for r in io.read("kg.fresh").collect()} == {
         ("b", 20), ("d", 40)}
+
+
+class _Crash(Exception):
+    pass
+
+
+@pytest.mark.parametrize("step", ["install", "cleanup"])
+def test_merge_into_swap_survives_a_crash_between_steps(spark, tmp_path, monkeypatch, step):
+    """A crash inside merge_into's "update" swap loses no table: the next
+    committed() finishes the half-done swap and the table reads as merged.
+    `install` dies as the staged table is renamed into place, `cleanup` as
+    the old table is deleted."""
+    io = TableIO(spark, warehouse=str(tmp_path / "wh"))
+    io.write(spark.createDataFrame([("a", 1), ("b", 2)], "k string, v int"), "kg.t")
+    src = spark.createDataFrame([("b", 20), ("c", 30)], "k string, v int")
+    path = io._path("kg.t")
+    rename, rmtree = os.rename, shutil.rmtree
+
+    def crashing_rename(old, new):
+        if step == "install" and new == path:
+            raise _Crash
+        rename(old, new)
+
+    def crashing_rmtree(p, *args, **kwargs):
+        if step == "cleanup" and p != path and p.startswith(path):
+            raise _Crash
+        rmtree(p, *args, **kwargs)
+
+    monkeypatch.setattr(os, "rename", crashing_rename)
+    monkeypatch.setattr(shutil, "rmtree", crashing_rmtree)
+    with pytest.raises(_Crash):
+        io.merge_into(src, "kg.t", keys=["k"])
+    monkeypatch.undo()
+
+    assert io.committed("kg.t")
+    assert {tuple(r) for r in io.read("kg.t").collect()} == {("a", 1), ("b", 20), ("c", 30)}
+    assert os.listdir(os.path.dirname(path)) == ["t"]
